@@ -5,33 +5,40 @@ BlockingRule.exclude_pairs_generated_by_all_preceding_rules_sql;
 salting via BlockingRule.salting_partitions;
 census: splink/analyse_blocking.py::count_comparisons_from_blocking_rule.
 
-Spark-first design (NOT a port):
+Spark-first design (NOT a port): one blocking-key table, one keyed join.
 
-- Each rule is a self-join (dedupe) / cross-source join (link) whose ON
-  expression is the rule conjoined with the pair-ordering predicate.
-  Catalyst extracts the equi components of the expression as join keys and
-  plans a shuffled hash / sort-merge join; the non-equi residue becomes a
-  join filter. Rules with NO equi component would fall back to a
-  BroadcastNestedLoopJoin (cartesian) — we reject those unless explicitly
-  allowed, because at 100 TB that plan is fatal.
-- Cross-rule pair dedup keeps the reference's NOT-previous-rules predicate
-  (a free filter inside the join) instead of a global ``distinct()`` over
-  pairs, which would be an enormous extra shuffle. The predicate is
-  ``NOT coalesce((rule), false)`` — the reference's exact form — so a
-  compound/OR prior rule or a NULL blocking column cannot scramble
-  operator precedence or null semantics.
-- Salting: key-append, ONE join per rule. The left side contributes a
-  deterministic salt expression ``pmod(xxhash64(uid), N)``; the right
-  side is explode-replicated N× with a literal ``__salt`` column; the
-  extra equality ``salt(l) = r.__salt`` becomes part of the extracted
-  equi-join key, so each hot block splits into N shuffle keys in a
-  single shuffle. (The reference — and our round-1 version — unions N
-  sub-joins, re-scanning and re-shuffling both sides N times: a
-  scale-killer for high salt factors.) The salt is deterministic
-  (xxhash64 of the unique id) so resume/tests are stable; AQE skew-join
-  splitting (spark.sql.adaptive.skewJoin.enabled) remains the first
-  line of defence — explicit salting is for the "one block = half the
-  table" pathology AQE cannot fix.
+- Each rule's top-level AND-conjunct equalities ``f(l) = g(r)``
+  (``extract_equi_components``) compile to a key: xxhash64 over the
+  components, NULL if any component is NULL. Every record becomes one
+  ``(uid[, source], __rule, __key, __salt)`` row per rule with a
+  non-NULL key (a ``generate`` over an array of per-rule structs), and
+  ONE equi-join on ``(__rule, __key, __salt)`` — carrying the pair
+  ordering and ``link_only`` predicates — yields the candidates of all
+  rules. Block sizes are key multiplicities, so the same table sizes
+  every rule's blocks exactly (the key/foreign-key join-size view).
+- The two sides' rows are attached to the candidates by uid, and a
+  candidate of rule i survives only if ``(rule_i) AND NOT
+  coalesce((rule_j), false)`` for every earlier j — the reference's
+  NOT-previous-rules predicate, so a compound/OR prior rule or a NULL
+  column cannot scramble precedence or null semantics. First rule
+  wins, non-equi residuals apply and key-hash collisions drop out in
+  that one filter; no global ``distinct()`` over pairs. Only the
+  columns the rules and ``retain_columns`` read reach the attach.
+- Rules with NO equi component would be cartesian products; they are
+  rejected unless ``allow_cartesian=True``, and then key every record
+  on one constant block.
+- Salting: key-append, on the same join. The left side's rows carry
+  ``pmod(xxhash64(uid), N)`` for a rule salted N ways; the right
+  side's rows are replicated under salts 0..N-1 in the same generate,
+  so each hot block splits into N shuffle keys with no extra join or
+  scan. The salt is deterministic, so resume/tests are stable; AQE
+  skew-join splitting (spark.sql.adaptive.skewJoin.enabled) remains
+  the first line of defence — explicit salting is for the "one block
+  = half the table" pathology AQE cannot fix.
+- Skew governor: rules with ``broadcast_hot_keys_above`` split the key
+  join into a shuffled normal branch and a broadcast hot branch by
+  (rule, key) membership, exact because both sides of a candidate
+  carry the same (rule, key).
 - ``link_only`` emits only cross-source pairs: the join condition
   conjoins ``l.source_dataset <> r.source_dataset``
   (reference: splink/blocking.py::block_using_rules_sql link_only
@@ -49,6 +56,7 @@ import re
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 from splink_spark.model import BlockingRule
 
@@ -71,21 +79,12 @@ def _ordering_condition(link_mode: bool, uid: str, source_col: str) -> str:
     return f"l.{uid} < r.{uid}"
 
 
-_EQUI_RE = re.compile(
-    r"\bl\.(\w+)\s*=\s*r\.(\w+)|\br\.(\w+)\s*=\s*l\.(\w+)", re.IGNORECASE
-)
-
-
 def rule_has_equi_component(rule: str) -> bool:
-    """True if the rule contains at least one ``f(l) = g(r)`` equality
-    that Catalyst can extract as a join key — bare columns (l.x = r.x,
-    the regex fast path) or derived-expression keys like
-    ``least(l.a, l.b) = least(r.a, r.b)`` (via
-    ``extract_equi_components``, which also requires no top-level OR
-    around them). Conservative textual check."""
-    return bool(_EQUI_RE.search(rule)) or bool(
-        extract_equi_components(rule)
-    )
+    """True if the rule has a top-level AND-conjunct equality
+    ``f(l) = g(r)`` (``extract_equi_components``). Only such a rule can
+    be a keyed join; anything else (a top-level OR included) would be a
+    cartesian product and needs ``allow_cartesian=True``."""
+    return bool(extract_equi_components(rule))
 
 
 def _mask_literals(s: str) -> str:
@@ -159,6 +158,17 @@ def _strip_balanced_parens(p: str) -> str:
     return p
 
 
+# A side alias qualifying a column: ``l.`` / ``R.`` / ``\`l\`.``. Spark
+# resolves qualifiers case-insensitively and accepts back-ticks, so the
+# parser does too.
+_SIDE_RE = re.compile(r"(?i)(?<![\w.`])`?([lr])`?\s*\.")
+
+
+def _sides(expr: str) -> set[str]:
+    """The side aliases (``l``/``r``) that qualify columns in ``expr``."""
+    return {m.lower() for m in _SIDE_RE.findall(_mask_literals(expr))}
+
+
 def extract_equi_components(rule: str) -> list[tuple[str, str]]:
     """Top-level AND-conjunct equalities ``f(l) = g(r)`` of ``rule``,
     returned as (left-expression, right-expression) strings.
@@ -191,8 +201,7 @@ def extract_equi_components(rule: str) -> list[tuple[str, str]]:
         if len(eq_pos) != 1:
             continue
         a, b = p[: eq_pos[0]].strip(), p[eq_pos[0] + 1 :].strip()
-        ra = set(re.findall(r"\b([lr])\s*\.", a))
-        rb = set(re.findall(r"\b([lr])\s*\.", b))
+        ra, rb = _sides(a), _sides(b)
         if ra == {"l"} and rb == {"r"}:
             out.append((a, b))
         elif ra == {"r"} and rb == {"l"}:
@@ -200,121 +209,140 @@ def extract_equi_components(rule: str) -> list[tuple[str, str]]:
     return out
 
 
-def _strip_alias(expr: str, alias: str) -> str:
-    return re.sub(rf"\b{alias}\s*\.\s*", "", expr)
-
-
-def _governed_join(
-    df: DataFrame,
-    right: DataFrame,
-    cond: str,
-    br: BlockingRule,
-    uid: str,
-) -> list[DataFrame]:
-    """Skew governor (north rule: "broadcast threshold on oversized
-    blocks"): split the rule's join into
-
-    - a NORMAL branch — rows whose equi key is not hot, joined by the
-      usual shuffled hash join (still salted if the rule asks for it);
-    - a HOT branch — rows of blocks larger than
-      ``broadcast_hot_keys_above``, where the right side is broadcast so
-      the n² pair work of each oversized block spreads across the left
-      side's partitions instead of landing on one shuffle reducer.
-
-    The split is exact: the rule's AND-conjunct equalities force l and r
-    of any matching pair onto the same key, so a pair is produced by
-    exactly one branch. NULL keys never satisfy an equality and are
-    excluded from the hot set. The hot-key census appears once per rule
-    in the plan; Spark's exchange reuse serves the four consumers
-    (semi/anti × l/r) from one broadcast.
-    """
-    equi = extract_equi_components(br.rule)
-    if not equi:
-        raise ValueError(
-            f"broadcast_hot_keys_above set on rule {br.rule!r}, but no "
-            "top-level AND-conjunct equi component could be extracted "
-            "(an OR rule cannot be hot-key split exactly)"
+def _comparison_type(spark, left: DataType, right: DataType) -> str:
+    """The type Spark casts both operands of ``left = right`` to."""
+    probe = spark.range(1).select(
+        F.expr(
+            f"cast(null as {left.simpleString()}) = "
+            f"cast(null as {right.simpleString()})"
         )
-    hk = [f"__hk{i}" for i in range(len(equi))]
-    l_keys = [
-        F.expr(_strip_alias(a, "l")).alias(k)
-        for (a, _), k in zip(equi, hk)
-    ]
-    keyed = df.select(*l_keys)
-    if right is not df:
-        r_keys = [
-            F.expr(_strip_alias(b, "r")).alias(k)
-            for (_, b), k in zip(equi, hk)
-        ]
-        keyed = keyed.unionByName(right.select(*r_keys))
-    hot_keys = (
-        keyed.na.drop(subset=hk)
-        .groupBy(*hk)
-        .count()
-        .filter(F.col("count") > br.broadcast_hot_keys_above)
-        .drop("count")
     )
-    semi_l = " AND ".join(
-        f"({a}) = h.{k}" for (a, _), k in zip(equi, hk)
-    )
-    semi_r = " AND ".join(
-        f"({b}) = h.{k}" for (_, b), k in zip(equi, hk)
-    )
-    hb = F.broadcast(hot_keys)
-    l_hot = df.alias("l").join(hb.alias("h"), F.expr(semi_l), "left_semi")
-    l_norm = df.alias("l").join(hb.alias("h"), F.expr(semi_l), "left_anti")
-    r_hot = right.alias("r").join(hb.alias("h"), F.expr(semi_r), "left_semi")
-    r_norm = right.alias("r").join(hb.alias("h"), F.expr(semi_r), "left_anti")
-    normal = _rule_join(l_norm, r_norm, cond, br, uid)
-    hot = l_hot.alias("l").join(
-        F.broadcast(r_hot).alias("r"), F.expr(cond), "inner"
-    )
-    # Returned un-projected (raw l.*/r.* joins carry duplicate column
-    # names); the caller projects each branch, then unions.
-    return [normal, hot]
+    eq = probe._jdf.queryExecution().analyzed().expressions().head().child()
+    return eq.left().dataType().catalogString()
 
 
-def _rule_join(
+def _rule_keys(
     df: DataFrame,
     right: DataFrame,
-    cond: str,
-    br: BlockingRule,
-    uid: str,
+    rules: list[BlockingRule],
+    allow_cartesian: bool,
+) -> list[tuple[str, str]]:
+    """Per rule, the (left, right) SQL of its blocking key: xxhash64 over
+    the rule's equi components, NULL when any component is NULL (an
+    equality over NULL never holds). Components whose two sides differ
+    in type are cast to the type Spark compares them in, so equal
+    values hash equally. A rule without equi components (only with
+    ``allow_cartesian``) keys every row on one constant block."""
+    comps = []
+    for br in rules:
+        equi = extract_equi_components(br.rule)
+        if not equi and not allow_cartesian:
+            raise ValueError(
+                f"blocking rule {br.rule!r} has no equi component; it would "
+                "plan as a nested-loop cartesian join. Pass "
+                "allow_cartesian=True only if you really mean it."
+            )
+        if not equi and br.broadcast_hot_keys_above > 0:
+            raise ValueError(
+                f"broadcast_hot_keys_above set on rule {br.rule!r}, but no "
+                "top-level AND-conjunct equi component could be extracted "
+                "(an OR rule cannot be hot-key split exactly)"
+            )
+        comps.append(equi)
+    flat = [c for equi in comps for c in equi]
+    types = iter(
+        zip(
+            df.alias("l").select(*[F.expr(a) for a, _ in flat]).schema,
+            right.alias("r").select(*[F.expr(b) for _, b in flat]).schema,
+        )
+    )
+
+    def key(parts: list[str]) -> str:
+        if not parts:
+            return "CAST(0 AS BIGINT)"
+        not_null = " AND ".join(f"{p} IS NOT NULL" for p in parts)
+        return f"CASE WHEN {not_null} THEN xxhash64({', '.join(parts)}) END"
+
+    out = []
+    for equi in comps:
+        ls, rs = [], []
+        for a, b in equi:
+            tl, tr = (f.dataType for f in next(types))
+            if tl.simpleString() != tr.simpleString():
+                t = _comparison_type(df.sparkSession, tl, tr)
+                a, b = f"CAST(({a}) AS {t})", f"CAST(({b}) AS {t})"
+            ls.append(f"({a})")
+            rs.append(f"({b})")
+        out.append((key(ls), key(rs)))
+    return out
+
+
+def _key_table(
+    frame: DataFrame, alias: str, cols: list[str], entries: list[tuple]
 ) -> DataFrame:
-    """One rule's join, salted if the rule asks for it (key-append
-    salting: ONE join, see module docstring)."""
-    if br.salting_partitions > 1:
-        n = br.salting_partitions
-        salted_right = right.withColumn(
-            "__salt", F.explode(F.array(*[F.lit(k) for k in range(n)]))
+    """One row per (record, rule[, salt]) with a non-NULL key:
+    ``cols`` + ``__rule``, ``__key``, ``__salt``. ``entries`` are
+    (rule id, key SQL, salt SQL) triples evaluated over ``frame`` under
+    ``alias``; a rule may contribute several entries (salt replicas)."""
+    structs = ", ".join(
+        f"struct({i} AS __rule, {key} AS __key, CAST({salt} AS INT) AS __salt)"
+        for i, key, salt in entries
+    )
+    return (
+        frame.alias(alias)
+        .select(
+            *[F.col(f"{alias}.{c}") for c in cols],
+            F.inline(F.expr(f"array({structs})")),
         )
-        salted = f"{cond} AND pmod(xxhash64(l.{uid}), {n}) = r.__salt"
-        return df.alias("l").join(
-            salted_right.alias("r"), F.expr(salted), "inner"
-        )
-    return df.alias("l").join(right.alias("r"), F.expr(cond), "inner")
+        .where("__key IS NOT NULL")
+    )
 
 
-def _pair_projection(
-    df: DataFrame,
-    uid: str,
-    retain_columns: list[str],
-    match_key: int,
-    link_mode: bool,
-    source_col: str,
-) -> list:
-    cols = [
-        F.col(f"l.{uid}").alias(f"{uid}_l"),
-        F.col(f"r.{uid}").alias(f"{uid}_r"),
-        F.lit(match_key).alias(MATCH_KEY_COLUMN),
+def _hot_split(
+    lkt: DataFrame,
+    rkt: DataFrame,
+    rules: list[BlockingRule],
+    two_table: bool,
+) -> list[tuple[DataFrame, DataFrame]]:
+    """Skew governor (north rule: "broadcast threshold on oversized
+    blocks"): split the key join into a NORMAL branch (keys not hot,
+    shuffled hash join, still salted) and a HOT branch (blocks larger
+    than the rule's ``broadcast_hot_keys_above``) where the right side
+    is broadcast, so an oversized block's n² pair work spreads over
+    the left side's partitions instead of one shuffle reducer.
+
+    The split is exact: both sides of a candidate carry the same
+    (rule, key), so each candidate comes from exactly one branch.
+    Block sizes count left keys, plus right keys for two tables (each
+    right record once: its salt-0 replica)."""
+    thr = {
+        i: br.broadcast_hot_keys_above
+        for i, br in enumerate(rules)
+        if br.broadcast_hot_keys_above > 0
+    }
+    keys = lkt.select("__rule", "__key")
+    if two_table:
+        keys = keys.unionByName(
+            rkt.where("__salt = 0").select("__rule", "__key")
+        )
+    limit = "CASE __rule " + " ".join(
+        f"WHEN {i} THEN {t}" for i, t in thr.items()
+    ) + " END"
+    hot = F.broadcast(
+        keys.where(F.col("__rule").isin(list(thr)))
+        .groupBy("__rule", "__key")
+        .count()
+        .where(F.col("count") > F.expr(limit))
+        .select("__rule", "__key")
+    )
+    k = ["__rule", "__key"]
+    return [
+        (lkt.join(hot, k, "left_anti"), rkt.join(hot, k, "left_anti")),
+        (
+            lkt.join(hot, k, "left_semi"),
+            F.broadcast(rkt.join(hot, k, "left_semi")),
+        ),
     ]
-    if link_mode:
-        cols.insert(2, F.col(f"l.{source_col}").alias(f"{source_col}_l"))
-        cols.insert(3, F.col(f"r.{source_col}").alias(f"{source_col}_r"))
-    for c in retain_columns:
-        cols.append(F.col(f"l.{c}").alias(f"{c}_l"))
-        cols.append(F.col(f"r.{c}").alias(f"{c}_r"))
-    return cols
 
 
 def block_using_rules(
@@ -331,11 +359,10 @@ def block_using_rules(
 ) -> DataFrame:
     """Candidate pairs under OR-of-rules with match_key provenance.
 
-    Output columns: ``<uid>_l``, ``<uid>_r``, ``match_key``, plus
-    ``<c>_l``/``<c>_r`` for each retained column. Pairs generated by an
-    earlier rule are excluded from later rules' output by construction
-    (NOT-predicates), so the union is exactly the OR of the rules with
-    no duplicate pairs — no global distinct needed.
+    Output columns: ``<uid>_l``, ``<uid>_r`` (+ ``<source>_l/_r`` in
+    link mode), ``match_key``, plus ``<c>_l``/``<c>_r`` for each
+    retained column. Each pair appears once, tagged with the first rule
+    it satisfies — exactly the OR of the rules, with no global distinct.
 
     ``link_only`` additionally excludes within-source pairs
     (reference: splink/blocking.py::block_using_rules_sql).
@@ -345,140 +372,78 @@ def block_using_rules(
     already unique and an ordering predicate over composite ids would
     silently drop pairs.
 
-    Heavy-payload discipline (r6): when ``retain_columns`` are asked
-    for, the rule joins themselves run on a NARROW projection — uid
-    (+ source) + only the columns the rules reference — and the
-    retained payload columns are attached AFTER the union by one
-    equi-join per side on the (unique, non-null) uid. Wide payloads
-    (token arrays, html) therefore cross exactly one join each instead
-    of riding through every rule's join: with R rules the payload
-    bytes previously moved through R broadcasts/shuffles x 2 sides,
-    now exactly 2 narrow-keyed attach joins. Pair multiset is
-    unchanged — the attach joins are 1:1 by the uid-uniqueness
-    precondition the whole linkage model already assumes.
+    One keyed join serves every rule (module docstring): each side
+    becomes a ``(uid[, source], __rule, __key, __salt)`` table, the
+    tables meet in one equi-join on ``(__rule, __key, __salt)`` carrying
+    the ordering / link_only predicates, the two sides' rows are
+    attached by uid, and a row survives only if its own rule holds and
+    no earlier one does. Precondition, as for the whole linkage model:
+    the uid (with the source column in link mode) is non-NULL and
+    unique on each side.
     """
     if retain_columns is None:
         retain_columns = []
     right = df_right if df_right is not None else df
-    ordering = _ordering_condition(link_mode, uid, source_col)
+    keys = _rule_keys(df, right, rules, allow_cartesian)
 
-    # narrow the join legs to the columns the rules (and predicates)
-    # actually read; payload columns attach after the union. Only
-    # worth it for R > 1 rules: with a single rule the payload crosses
-    # its one join once either way, and the two attach joins would be
-    # pure overhead (measured +0.1s on the single-rule o7 path).
-    narrow = bool(retain_columns) and len(rules) > 1
-    if narrow:
-        refs: set[str] = set()
-        for br in rules:
-            refs |= {
-                m.group(1)
-                for m in re.finditer(r"\b[lr]\s*\.\s*(\w+)", br.rule)
-            }
-        keep = [uid]
-        if link_mode or link_only:
-            keep.append(source_col)
-        keep += sorted(c for c in refs if c not in keep)
-        df_j = df.select(*[c for c in keep if c in df.columns])
-        right_j = (
-            df_j
-            if right is df
-            else right.select(*[c for c in keep if c in right.columns])
+    ids = [uid] + ([source_col] if link_mode or link_only else [])
+    lkt = _key_table(df, "l", ids, [
+        (
+            i,
+            lk,
+            f"pmod(xxhash64(l.{uid}), {br.salting_partitions})"
+            if br.salting_partitions > 1
+            else "0",
         )
-        if len(rules) > 1:
-            # With R rules the narrow key table is scanned 2R times
-            # (once per join side per rule). A lazy localCheckpoint
-            # materializes those few dozen bytes/row ONCE; measured
-            # 2.2x on the 5-rule web-dedupe join (4.5s -> 2.1s at 50k
-            # rows x 32 cores) vs re-reading the wide source each
-            # time. R=1 keeps the raw plan (2 consumers — a barrier
-            # buys nothing and would hide the source scan from plan
-            # audits).
-            df_j = df_j.localCheckpoint(eager=False)
-            right_j = (
-                df_j
-                if right is df
-                else right_j.localCheckpoint(eager=False)
-            )
+        for i, (br, (lk, _)) in enumerate(zip(rules, keys))
+    ])
+    rkt = _key_table(right, "r", ids, [
+        (i, rk, s)
+        for i, (br, (_, rk)) in enumerate(zip(rules, keys))
+        for s in range(max(br.salting_partitions, 1))
+    ])
+
+    conds = ["l.__rule = r.__rule", "l.__key = r.__key", "l.__salt = r.__salt"]
+    if pair_ordering:
+        conds.append(_ordering_condition(link_mode, uid, source_col))
+    if link_only:
+        conds.append(f"l.{source_col} <> r.{source_col}")
+    cond = F.expr(" AND ".join(conds))
+    if any(br.broadcast_hot_keys_above > 0 for br in rules):
+        branches = _hot_split(lkt, rkt, rules, right is not df)
     else:
-        df_j, right_j = df, right
-
-    outputs: list[DataFrame] = []
-    for i, br in enumerate(rules):
-        if not rule_has_equi_component(br.rule) and not allow_cartesian:
-            raise ValueError(
-                f"blocking rule {br.rule!r} has no equi component; it would "
-                "plan as a nested-loop cartesian join. Pass "
-                "allow_cartesian=True only if you really mean it."
-            )
-        conds = [f"({br.rule})"]
-        if pair_ordering:
-            conds.append(f"({ordering})")
-        if link_only:
-            conds.append(f"(l.{source_col} <> r.{source_col})")
-        # Cross-rule pair dedup: exclude pairs matched by any earlier rule.
-        # coalesce((rule), false) — NOT over a NULL rule keeps the pair.
-        for prev in rules[:i]:
-            conds.append(f"(NOT coalesce(({prev.rule}), false))")
-        cond = " AND ".join(conds)
-
-        if br.broadcast_hot_keys_above > 0:
-            branches = _governed_join(df_j, right_j, cond, br, uid)
-        else:
-            branches = [_rule_join(df_j, right_j, cond, br, uid)]
-        for j in branches:
-            outputs.append(
-                j.select(
-                    *_pair_projection(
-                        df_j,
-                        uid,
-                        [] if narrow else retain_columns,
-                        i,
-                        link_mode,
-                        source_col,
-                    )
-                )
-            )
-
-    out = outputs[0]
-    for o in outputs[1:]:
-        out = out.unionByName(o)
-
-    if narrow:
-        l_keys = [f"{uid}_l"] + (
-            [f"{source_col}_l"] if link_mode else []
+        branches = [(lkt, rkt)]
+    cands = None
+    for lb, rb in branches:
+        branch = lb.alias("l").join(rb.alias("r"), cond).select(
+            F.col("l.__rule").alias("__rule"),
+            *[F.col(f"{s}.{c}").alias(f"__{s}_{c}") for s in "lr" for c in ids],
         )
-        r_keys = [f"{uid}_r"] + (
-            [f"{source_col}_r"] if link_mode else []
-        )
-        l_pay = df.select(
-            F.col(uid).alias(f"{uid}_l"),
-            *(
-                [F.col(source_col).alias(f"{source_col}_l")]
-                if link_mode
-                else []
-            ),
-            *[F.col(c).alias(f"{c}_l") for c in retain_columns],
-        )
-        r_pay = right.select(
-            F.col(uid).alias(f"{uid}_r"),
-            *(
-                [F.col(source_col).alias(f"{source_col}_r")]
-                if link_mode
-                else []
-            ),
-            *[F.col(c).alias(f"{c}_r") for c in retain_columns],
-        )
-        out = out.join(l_pay, l_keys).join(r_pay, r_keys)
-        # reproduce the historical column order exactly
-        final_cols = [f"{uid}_l", f"{uid}_r"]
-        if link_mode:
-            final_cols += [f"{source_col}_l", f"{source_col}_r"]
-        final_cols.append(MATCH_KEY_COLUMN)
-        for c in retain_columns:
-            final_cols += [f"{c}_l", f"{c}_r"]
-        out = out.select(*final_cols)
-    return out
+        cands = branch if cands is None else cands.unionByName(branch)
+
+    # attach each side's row by its identity, then keep the pair only
+    # under its own rule: first rule wins, residuals (non-equi
+    # conjuncts) and key-hash collisions drop out here.
+    att = ids if link_mode else [uid]
+    for s, frame in (("l", df), ("r", right)):
+        on = " AND ".join(f"__{s}_{c} = {s}.{c}" for c in att)
+        cands = cands.join(frame.alias(s), F.expr(on))
+    first_wins = "CASE __rule " + " ".join(
+        f"WHEN {i} THEN ({br.rule})"
+        + "".join(f" AND NOT coalesce(({p.rule}), false)" for p in rules[:i])
+        for i, br in enumerate(rules)
+    ) + " END"
+
+    cols = [F.col(f"l.{uid}").alias(f"{uid}_l"), F.col(f"r.{uid}").alias(f"{uid}_r")]
+    if link_mode:
+        cols += [
+            F.col(f"l.{source_col}").alias(f"{source_col}_l"),
+            F.col(f"r.{source_col}").alias(f"{source_col}_r"),
+        ]
+    cols.append(F.col("__rule").alias(MATCH_KEY_COLUMN))
+    for c in retain_columns:
+        cols += [F.col(f"l.{c}").alias(f"{c}_l"), F.col(f"r.{c}").alias(f"{c}_r")]
+    return cands.where(F.expr(first_wins)).select(*cols)
 
 
 def count_comparisons_from_blocking_rule(
@@ -703,7 +668,7 @@ def tune_blocking_rules(
 
     Link mode: pass ``df_right`` and the census counts the UNION of
     left-key and right-key expressions — the same hot-key definition
-    ``_governed_join`` applies — so a hot key concentrated on either
+    the governor in ``block_using_rules`` applies — so a hot key concentrated on either
     side is seen. Asymmetric rules (``l.a = r.b``) are censused on
     their own side's expression.
 
@@ -735,25 +700,19 @@ def tune_blocking_rules(
             )
             continue
         kn = [f"__tk{i}" for i in range(len(equi))]
-        l_keys = [
-            F.expr(_strip_alias(a, "l")).alias(k)
-            for (a, _), k in zip(equi, kn)
-        ]
-        # __bc marks rows of the side _governed_join broadcasts (r_hot
-        # comes from the right frame; in dedupe mode right IS df, so
-        # every row counts against the broadcast budget).
+        l_keys = [F.expr(a).alias(k) for (a, _), k in zip(equi, kn)]
+        # __bc marks rows of the side the governor broadcasts (its hot
+        # branch broadcasts the right side; in dedupe mode right IS df,
+        # so every row counts against the broadcast budget).
         if df_right is not None:
-            r_keys = [
-                F.expr(_strip_alias(b, "r")).alias(k)
-                for (_, b), k in zip(equi, kn)
-            ]
-            keyed = df.select(*l_keys).withColumn(
+            r_keys = [F.expr(b).alias(k) for (_, b), k in zip(equi, kn)]
+            keyed = df.alias("l").select(*l_keys).withColumn(
                 "__bc", F.lit(0)
             ).unionByName(
-                df_right.select(*r_keys).withColumn("__bc", F.lit(1))
+                df_right.alias("r").select(*r_keys).withColumn("__bc", F.lit(1))
             )
         else:
-            keyed = df.select(*l_keys).withColumn("__bc", F.lit(1))
+            keyed = df.alias("l").select(*l_keys).withColumn("__bc", F.lit(1))
         census = (
             keyed.na.drop(subset=kn)
             .groupBy(*kn)

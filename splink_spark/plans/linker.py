@@ -344,8 +344,9 @@ class Linker:
         threshold_match_probability: float | None = None,
     ) -> DataFrame:
         """Score a small new table against the base without re-blocking
-        everything: the new side is broadcast, so the base never shuffles
-        (natural broadcast-hash-join at any base size).
+        everything: the new side is broadcast into the blocking key
+        join, so the base's key table never shuffles for it (a natural
+        broadcast-hash-join at any base size).
 
         TF columns on the new side come from the BASE's cached TF tables
         (not batch-local frequencies — a new record's tf must reflect

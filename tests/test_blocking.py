@@ -105,6 +105,13 @@ def test_cartesian_guard():
     assert not rule_has_equi_component("abs(l.x - r.x) < 2")
     assert rule_has_equi_component("l.a = r.a AND abs(l.x - r.x) < 2")
     assert rule_has_equi_component("r.a = l.a")
+    # a top-level OR of equalities plans as a cartesian product
+    assert not rule_has_equi_component(
+        "l.domain = r.domain OR l.title = r.title"
+    )
+    assert rule_has_equi_component(
+        "l.domain = r.domain AND (l.title = r.title OR l.x = r.x)"
+    )
 
 
 def test_retained_columns_suffixed(docs):
@@ -665,3 +672,178 @@ def test_block_on_constructor(spark):
         .collect()
     }
     assert a == b and a
+
+
+# ------------------------------------------------ reference equivalence
+
+# Three rules exercising the cases the key table must get exactly right:
+# a residual (non-equi) conjunct, an expression key, and an asymmetric
+# key whose two sides differ in type (int vs numeric string).
+_REF_RULES = [
+    "l.a = r.a AND levenshtein(l.b, r.b) <= 1",
+    "least(l.a, l.b) = least(r.a, r.b)",
+    "l.n = r.s",
+]
+_REF_SCHEMA = (
+    "unique_id long, a string, b string, n int, s string, "
+    "source_dataset string"
+)
+
+
+def _ref_rows(seed: int, source: str, n_rows: int = 28) -> list[tuple]:
+    import random
+
+    rng = random.Random(seed)
+    out = []
+    for i in range(n_rows):
+        a = rng.choice(["p", "p", "p", "p", "q", "q", "r", None])
+        b = rng.choice(["ab", "ac", "bb", "p", "q", None])
+        n = rng.choice([1, 2, 3, None])
+        s = rng.choice(["1", "01", "2", "3", None])
+        out.append((i, a, b, n, s, source))
+    return out
+
+
+def _reference_pairs(left, right, rules, *, ordering, link_only, cols):
+    """The definition of OR-of-rules blocking with first-rule-wins
+    provenance: a cartesian join, filtered by the first rule that holds
+    for the pair, plus the ordering and link_only predicates."""
+    case = (
+        "CASE "
+        + " ".join(
+            f"WHEN coalesce(({r.rule}), false) THEN {i}"
+            for i, r in enumerate(rules)
+        )
+        + " END"
+    )
+    conds = [f"({case}) IS NOT NULL"]
+    if ordering:
+        conds.append(ordering)
+    if link_only:
+        conds.append("l.source_dataset <> r.source_dataset")
+    # one partition per side: a tiny cross join, not 8 x 8 tasks
+    out = (
+        left.coalesce(1).alias("l").crossJoin(right.coalesce(1).alias("r"))
+    ).where(
+        F.expr(" AND ".join(conds))
+    )
+    return out.select(
+        *[
+            F.expr(case if c == "match_key" else f"{c[-1]}.{c[:-2]}").alias(c)
+            for c in cols
+        ]
+    )
+
+
+def _multiset(df, cols):
+    from collections import Counter
+
+    return Counter(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("mode", ["dedupe", "link_only", "two_table"])
+@pytest.mark.parametrize("variant", ["plain", "retain", "salted", "governed"])
+def test_block_using_rules_equals_reference(spark, mode, variant):
+    """block_using_rules' exact (uid_l, uid_r, match_key) multiset (plus
+    source and retained columns) equals its definition, for every
+    blocking mode and every join variant."""
+    extra = {
+        "plain": {},
+        "retain": {},
+        "salted": {"salting_partitions": 3},
+        "governed": {"broadcast_hot_keys_above": 4},
+    }[variant]
+    rules = [BlockingRule(r, **extra) for r in _REF_RULES]
+    retain = ["b", "n"] if variant in ("retain", "governed") else []
+    left_rows = _ref_rows(1, "s1")
+    kw: dict = {}
+    if mode == "dedupe":
+        left = right = spark.createDataFrame(left_rows, _REF_SCHEMA)
+        ordering, link_only = "l.unique_id < r.unique_id", False
+    elif mode == "link_only":
+        # uids repeat across sources: identity is (source, uid)
+        left = right = spark.createDataFrame(
+            left_rows + _ref_rows(2, "s2"), _REF_SCHEMA
+        )
+        ordering = (
+            "concat(l.source_dataset, '-__-', cast(l.unique_id as string)) "
+            "< concat(r.source_dataset, '-__-', cast(r.unique_id as string))"
+        )
+        link_only = True
+        kw = dict(link_mode=True, link_only=True)
+    else:
+        left = spark.createDataFrame(left_rows, _REF_SCHEMA)
+        right = spark.createDataFrame(_ref_rows(3, "__new__", 9), _REF_SCHEMA)
+        ordering, link_only = None, False
+        kw = dict(link_mode=True, df_right=right, pair_ordering=False)
+    cols = ["unique_id_l", "unique_id_r", "match_key"]
+    if kw.get("link_mode"):
+        cols += ["source_dataset_l", "source_dataset_r"]
+    for c in retain:
+        cols += [f"{c}_l", f"{c}_r"]
+    ours = block_using_rules(left, rules, retain_columns=retain, **kw)
+    want = _reference_pairs(
+        left, right, rules, ordering=ordering, link_only=link_only, cols=cols
+    )
+    got, exp = _multiset(ours, cols), _multiset(want, cols)
+    assert sum(exp.values()) > 0
+    assert {k[2] for k in exp} == {0, 1, 2}
+    assert got == exp
+
+
+def test_or_rule_needs_allow_cartesian_and_then_matches_reference(spark):
+    """A top-level-OR rule has no equi component: the guard refuses it,
+    and with allow_cartesian=True its pairs are exact."""
+    df = spark.createDataFrame(_ref_rows(4, "s1"), _REF_SCHEMA)
+    rules = [
+        BlockingRule("l.a = r.a OR l.b = r.b"),
+        BlockingRule("l.n = r.s"),
+    ]
+    with pytest.raises(ValueError, match="equi component"):
+        block_using_rules(df, rules)
+    cols = ["unique_id_l", "unique_id_r", "match_key"]
+    ours = block_using_rules(df, rules, allow_cartesian=True)
+    want = _reference_pairs(
+        df,
+        df,
+        rules,
+        ordering="l.unique_id < r.unique_id",
+        link_only=False,
+        cols=cols,
+    )
+    assert _multiset(ours, cols) == _multiset(want, cols)
+
+
+def test_alias_case_and_backticks(spark):
+    """Upper-case and back-ticked side aliases parse like plain ones,
+    with and without retained columns."""
+    from splink_spark.operators.blocking import extract_equi_components
+
+    assert extract_equi_components("L.domain = R.domain") == [
+        ("L.domain", "R.domain")
+    ]
+    assert extract_equi_components("R.domain = l.domain") == [
+        ("l.domain", "R.domain")
+    ]
+    assert extract_equi_components("l.`domain` = r.`domain`") == [
+        ("l.`domain`", "r.`domain`")
+    ]
+    assert extract_equi_components("`l`.domain = `r`.domain") == [
+        ("`l`.domain", "`r`.domain")
+    ]
+    rows = [
+        (i, f"d{i % 4}", f"t{i % 5}", "en" if i % 3 else None)
+        for i in range(40)
+    ]
+    df = spark.createDataFrame(
+        rows, "unique_id long, domain string, title string, lang string"
+    )
+    plain = [BlockingRule("l.domain = r.domain"), BlockingRule("l.title = r.title")]
+    cols = ["unique_id_l", "unique_id_r", "match_key", "lang_l", "lang_r"]
+    want = _multiset(block_using_rules(df, plain, retain_columns=["lang"]), cols)
+    assert want
+    for first in ("L.domain = R.domain", "l.`domain` = r.`domain`"):
+        rules = [BlockingRule(first), plain[1]]
+        got = block_using_rules(df, rules, retain_columns=["lang"])
+        assert _multiset(got, cols) == want
+        assert block_using_rules(df, rules).count() == sum(want.values())

@@ -128,7 +128,9 @@ def test_tf_joinback_is_broadcast(docs):
 def test_blocking_compiles_to_equi_join(spark, docs):
     """O4: an equi blocking rule with the non-equi ordering predicate
     attached must still plan as a hash-partitioned equi join, never a
-    nested-loop/cartesian (which would be O(n^2) tasks at scale)."""
+    nested-loop/cartesian (which would be O(n^2) tasks at scale). The
+    plan has three equi joins: the (rule, key) candidate join and the
+    two uid joins that attach each side's row."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pairs = block_using_rules(docs, [BlockingRule("l.lang = r.lang")])
@@ -137,23 +139,26 @@ def test_blocking_compiles_to_equi_join(spark, docs):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
-    assert equi == 1, p
+    assert equi == 3, p
 
 
 def test_salted_blocking_is_one_equi_join(spark, docs):
-    """O5: key-append salting must not multiply join nodes — one rule is
-    ONE join whose key simply gains the salt conjunct."""
+    """O5: key-append salting must not multiply join nodes — the salt is
+    one more key column of the same candidate join, so a salted rule
+    plans exactly the joins an unsalted one does."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        plain = block_using_rules(docs, [BlockingRule("l.lang = r.lang")])
         pairs = block_using_rules(
             docs, [BlockingRule("l.lang = r.lang", salting_partitions=4)]
         )
         equi, bad, _ = join_counts(pairs)
         p = plan_str(pairs, mode="simple")
+        equi_plain = join_counts(plain)[0]
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
-    assert equi == 1, p
+    assert equi == equi_plain == 3, p
 
 
 def test_governed_blocking_broadcasts_hot_branch(spark, docs):
@@ -172,9 +177,36 @@ def test_governed_blocking_broadcasts_hot_branch(spark, docs):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
     # 4 census probes (semi/anti x l/r) + the hot-branch pair join are all
-    # explicit F.broadcast() joins; the normal branch is the lone shuffle.
+    # explicit F.broadcast() joins; the shuffled joins are the normal
+    # branch and the two uid joins that attach each side's row.
     assert bcast >= 5, p
-    assert _count(p, ("SortMergeJoin", "ShuffledHashJoin")) == 1, p
+    assert _count(p, ("SortMergeJoin", "ShuffledHashJoin")) == 3, p
+
+
+def test_online_matching_broadcasts_new_records(spark, docs, settings_native):
+    """O17: find_matches_to_new_records broadcasts the new-records side
+    into the candidate (rule, key) join, so the base's key table is
+    never shuffled for it, and no branch degrades to a nested loop.
+    Automatic broadcasts are off, so the broadcast comes from the
+    method's own hint."""
+    from splink_spark.plans.linker import Linker
+
+    linker = Linker(docs, settings_native)
+    new = docs.limit(3)
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        p = plan_str(linker.find_matches_to_new_records(new), mode="simple")
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert _count(p, BAD_JOIN_NODES) == 0, p
+    candidate_joins = [
+        ln for ln in p.splitlines() if "Join" in ln and "__key" in ln
+    ]
+    assert candidate_joins, p
+    assert all(
+        "BroadcastHashJoin" in ln and "BuildRight" in ln
+        for ln in candidate_joins
+    ), p
 
 
 def test_native_scoring_is_codegen_no_python(spark, docs, settings_native):
