@@ -10,23 +10,25 @@ Spark-first design (NOT a port): one blocking-key table, one keyed join.
 - Each rule's top-level AND-conjunct equalities ``f(l) = g(r)``
   (``extract_equi_components``) compile to a key: xxhash64 over the
   components, NULL if any component is NULL. Every record becomes one
-  ``(uid[, source], __rule, __key, __salt)`` row per rule with a
-  non-NULL key (a ``generate`` over an array of per-rule structs), and
-  ONE equi-join on ``(__rule, __key, __salt)`` — carrying the pair
-  ordering and ``link_only`` predicates — yields the candidates of all
-  rules. Block sizes are key multiplicities, so the same table sizes
-  every rule's blocks exactly (the key/foreign-key join-size view).
-- The two sides' rows are attached to the candidates by uid, and a
-  candidate of rule i survives only if ``(rule_i) AND NOT
+  row per rule with a non-NULL key — its uid[, source], the columns the
+  rules read, ``__rule``, ``__key``, ``__salt`` (a ``generate`` over
+  per-rule structs) — and ONE equi-join on ``(__rule, __key,
+  __salt)`` yields the candidates of all rules. Block sizes are key
+  multiplicities, so the same table sizes every rule's blocks exactly
+  (the key/foreign-key join-size view).
+- That join keeps a candidate of rule i only if ``(rule_i) AND NOT
   coalesce((rule_j), false)`` for every earlier j — the reference's
   NOT-previous-rules predicate, so a compound/OR prior rule or a NULL
-  column cannot scramble precedence or null semantics. First rule
-  wins, non-equi residuals apply and key-hash collisions drop out in
-  that one filter; no global ``distinct()`` over pairs. Only the
-  columns the rules and ``retain_columns`` read reach the attach.
+  column cannot scramble precedence. First rule wins, residuals and
+  key-hash collisions drop out there, with no global ``distinct()``;
+  retained columns are then attached to the kept pairs by uid.
+- One rule is joined on its own condition over whole frames, which
+  Spark keys on the raw equi components: no hash and no attach, and a
+  table bucketed on those columns blocks with no Exchange.
 - Rules with NO equi component would be cartesian products; they are
-  rejected unless ``allow_cartesian=True``, and then key every record
-  on one constant block.
+  rejected unless ``allow_cartesian=True``. Alone, such a rule plans as
+  a nested-loop join; among several it is ONE constant-key block, one
+  task.
 - Salting: key-append, on the same join. The left side's rows carry
   ``pmod(xxhash64(uid), N)`` for a rule salted N ways; the right
   side's rows are replicated under salts 0..N-1 in the same generate,
@@ -51,6 +53,7 @@ Spark-first design (NOT a port): one blocking-key table, one keyed join.
 from __future__ import annotations
 
 import dataclasses
+import functools
 import math
 import re
 
@@ -158,15 +161,24 @@ def _strip_balanced_parens(p: str) -> str:
     return p
 
 
-# A side alias qualifying a column: ``l.`` / ``R.`` / ``\`l\`.``. Spark
-# resolves qualifiers case-insensitively and accepts back-ticks, so the
-# parser does too.
-_SIDE_RE = re.compile(r"(?i)(?<![\w.`])`?([lr])`?\s*\.")
+# A side alias qualifying a column: ``l.`` / ``R.`` / ``\`l\`.``, and
+# the (possibly back-ticked) column it qualifies. Spark resolves
+# qualifiers case-insensitively and accepts back-ticks, so the parser
+# does too.
+_SIDE_RE = re.compile(r"(?i)(?<![\w.`])`?([lr])`?\s*\.\s*(`[^`]+`|\w+)")
+
+
+def _side_columns(expr: str) -> set[tuple[str, str]]:
+    """(side, column) for each ``l.col`` / ``r.col`` in ``expr``."""
+    return {
+        (side.lower(), col.strip("`"))
+        for side, col in _SIDE_RE.findall(_mask_literals(expr))
+    }
 
 
 def _sides(expr: str) -> set[str]:
     """The side aliases (``l``/``r``) that qualify columns in ``expr``."""
-    return {m.lower() for m in _SIDE_RE.findall(_mask_literals(expr))}
+    return {side for side, _ in _side_columns(expr)}
 
 
 def extract_equi_components(rule: str) -> list[tuple[str, str]]:
@@ -240,7 +252,8 @@ def _rule_keys(
             raise ValueError(
                 f"blocking rule {br.rule!r} has no equi component; it would "
                 "plan as a nested-loop cartesian join. Pass "
-                "allow_cartesian=True only if you really mean it."
+                "allow_cartesian=True only if you really mean it (among "
+                "several rules, its pairs are then generated by one task)."
             )
         if not equi and br.broadcast_hot_keys_above > 0:
             raise ValueError(
@@ -280,22 +293,25 @@ def _rule_keys(
 def _key_table(
     frame: DataFrame, alias: str, cols: list[str], entries: list[tuple]
 ) -> DataFrame:
-    """One row per (record, rule[, salt]) with a non-NULL key:
-    ``cols`` + ``__rule``, ``__key``, ``__salt``. ``entries`` are
-    (rule id, key SQL, salt SQL) triples evaluated over ``frame`` under
-    ``alias``; a rule may contribute several entries (salt replicas)."""
-    structs = ", ".join(
-        f"struct({i} AS __rule, {key} AS __key, CAST({salt} AS INT) AS __salt)"
-        for i, key, salt in entries
-    )
-    return (
-        frame.alias(alias)
-        .select(
-            *[F.col(f"{alias}.{c}") for c in cols],
-            F.inline(F.expr(f"array({structs})")),
+    """One row per (record, rule[, salt]): ``cols`` + ``__rule``,
+    ``__key``, ``__salt``, from (rule id, key SQL, salt SQL) ``entries``
+    over ``frame`` under ``alias``. A NULL key never joins. A single
+    entry is a projection, not a generate, so a bucketed frame keeps
+    its layout."""
+    if len(entries) == 1:
+        ((i, key, salt),) = entries
+        gen = [
+            F.lit(i).alias("__rule"),
+            F.expr(key).alias("__key"),
+            F.expr(f"CAST({salt} AS INT)").alias("__salt"),
+        ]
+    else:
+        structs = ", ".join(
+            f"struct({i} AS __rule, {key} AS __key, CAST({salt} AS INT) AS __salt)"
+            for i, key, salt in entries
         )
-        .where("__key IS NOT NULL")
-    )
+        gen = [F.inline(F.expr(f"array({structs})"))]
+    return frame.alias(alias).select(*[F.col(f"{alias}.{c}") for c in cols], *gen)
 
 
 def _hot_split(
@@ -372,14 +388,9 @@ def block_using_rules(
     already unique and an ordering predicate over composite ids would
     silently drop pairs.
 
-    One keyed join serves every rule (module docstring): each side
-    becomes a ``(uid[, source], __rule, __key, __salt)`` table, the
-    tables meet in one equi-join on ``(__rule, __key, __salt)`` carrying
-    the ordering / link_only predicates, the two sides' rows are
-    attached by uid, and a row survives only if its own rule holds and
-    no earlier one does. Precondition, as for the whole linkage model:
-    the uid (with the source column in link mode) is non-NULL and
-    unique on each side.
+    The join design is in the module docstring. Precondition, as for
+    the whole linkage model: the uid (with the source column in link
+    mode) is non-NULL and unique on each side.
     """
     if retain_columns is None:
         retain_columns = []
@@ -387,7 +398,20 @@ def block_using_rules(
     keys = _rule_keys(df, right, rules, allow_cartesian)
 
     ids = [uid] + ([source_col] if link_mode or link_only else [])
-    lkt = _key_table(df, "l", ids, [
+    one = len(rules) == 1
+
+    def carry(side: str) -> list[str]:
+        # several rules: ids + every column a rule reads on this side
+        if one:
+            return ["*"]
+        out = {c.lower(): c for c in ids}
+        for br in rules:
+            for s, c in sorted(_side_columns(br.rule)):
+                if s == side:
+                    out.setdefault(c.lower(), f"`{c}`")
+        return list(out.values())
+
+    lkt = _key_table(df, "l", carry("l"), [
         (
             i,
             lk,
@@ -397,13 +421,23 @@ def block_using_rules(
         )
         for i, (br, (lk, _)) in enumerate(zip(rules, keys))
     ])
-    rkt = _key_table(right, "r", ids, [
+    rkt = _key_table(right, "r", carry("r"), [
         (i, rk, s)
         for i, (br, (_, rk)) in enumerate(zip(rules, keys))
         for s in range(max(br.salting_partitions, 1))
     ])
 
-    conds = ["l.__rule = r.__rule", "l.__key = r.__key", "l.__salt = r.__salt"]
+    first_wins = "CASE l.__rule " + " ".join(
+        f"WHEN {i} THEN ({br.rule})"
+        + "".join(f" AND NOT coalesce(({p.rule}), false)" for p in rules[:i])
+        for i, br in enumerate(rules)
+    ) + " END"
+    if one:
+        conds = [f"({rules[0].rule})"]
+    else:
+        conds = ["l.__rule = r.__rule", "l.__key = r.__key", first_wins]
+    if any(br.salting_partitions > 1 for br in rules):
+        conds.append("l.__salt = r.__salt")
     if pair_ordering:
         conds.append(_ordering_condition(link_mode, uid, source_col))
     if link_only:
@@ -413,37 +447,35 @@ def block_using_rules(
         branches = _hot_split(lkt, rkt, rules, right is not df)
     else:
         branches = [(lkt, rkt)]
-    cands = None
-    for lb, rb in branches:
-        branch = lb.alias("l").join(rb.alias("r"), cond).select(
+    joined = [lb.alias("l").join(rb.alias("r"), cond) for lb, rb in branches]
+
+    def pairs(frame: DataFrame, rule_col: str) -> DataFrame:
+        def both(cs: list[str]) -> list:
+            return [F.col(f"{s}.{c}").alias(f"{c}_{s}") for c in cs for s in "lr"]
+
+        return frame.select(
+            *both([uid] + ([source_col] if link_mode else [])),
+            F.col(rule_col).alias(MATCH_KEY_COLUMN),
+            *both(retain_columns),
+        )
+
+    if one or not retain_columns:
+        return functools.reduce(
+            DataFrame.unionByName, [pairs(j, "l.__rule") for j in joined]
+        )
+    # attach the retained columns to the kept pairs by identity
+    cands = functools.reduce(DataFrame.unionByName, [
+        j.select(
             F.col("l.__rule").alias("__rule"),
             *[F.col(f"{s}.{c}").alias(f"__{s}_{c}") for s in "lr" for c in ids],
         )
-        cands = branch if cands is None else cands.unionByName(branch)
-
-    # attach each side's row by its identity, then keep the pair only
-    # under its own rule: first rule wins, residuals (non-equi
-    # conjuncts) and key-hash collisions drop out here.
+        for j in joined
+    ])
     att = ids if link_mode else [uid]
     for s, frame in (("l", df), ("r", right)):
         on = " AND ".join(f"__{s}_{c} = {s}.{c}" for c in att)
         cands = cands.join(frame.alias(s), F.expr(on))
-    first_wins = "CASE __rule " + " ".join(
-        f"WHEN {i} THEN ({br.rule})"
-        + "".join(f" AND NOT coalesce(({p.rule}), false)" for p in rules[:i])
-        for i, br in enumerate(rules)
-    ) + " END"
-
-    cols = [F.col(f"l.{uid}").alias(f"{uid}_l"), F.col(f"r.{uid}").alias(f"{uid}_r")]
-    if link_mode:
-        cols += [
-            F.col(f"l.{source_col}").alias(f"{source_col}_l"),
-            F.col(f"r.{source_col}").alias(f"{source_col}_r"),
-        ]
-    cols.append(F.col("__rule").alias(MATCH_KEY_COLUMN))
-    for c in retain_columns:
-        cols += [F.col(f"l.{c}").alias(f"{c}_l"), F.col(f"r.{c}").alias(f"{c}_r")]
-    return cands.where(F.expr(first_wins)).select(*cols)
+    return pairs(cands, "__rule")
 
 
 def count_comparisons_from_blocking_rule(

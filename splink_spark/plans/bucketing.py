@@ -22,7 +22,9 @@ broadcasts or shuffles its own few GB), and EM re-training's
 Plan contracts (pinned by tests/test_plans_bucketing.py):
   - bucketed ⋈ bucketed on the bucket key, equal bucket counts →
     SortMergeJoin with ZERO Exchange;
-  - bucketed self-join (blocking) → Exchange-free pair generation;
+  - bucketed self-join (blocking with one rule keyed on the bucket
+    columns) → Exchange-free pair generation; several rules share
+    one (rule, key hash) join, which shuffles;
   - groupBy(bucket key) over the bucketed table → final aggregate
     without a shuffle.
 

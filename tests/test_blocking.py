@@ -741,19 +741,21 @@ def _multiset(df, cols):
     return Counter(tuple(r) for r in df.select(*cols).collect())
 
 
+@pytest.mark.parametrize("n_rules", [1, 3])
 @pytest.mark.parametrize("mode", ["dedupe", "link_only", "two_table"])
 @pytest.mark.parametrize("variant", ["plain", "retain", "salted", "governed"])
-def test_block_using_rules_equals_reference(spark, mode, variant):
+def test_block_using_rules_equals_reference(spark, mode, variant, n_rules):
     """block_using_rules' exact (uid_l, uid_r, match_key) multiset (plus
     source and retained columns) equals its definition, for every
-    blocking mode and every join variant."""
+    blocking mode and every join variant, with one rule (joined on its
+    own columns) and with several (one keyed join)."""
     extra = {
         "plain": {},
         "retain": {},
         "salted": {"salting_partitions": 3},
         "governed": {"broadcast_hot_keys_above": 4},
     }[variant]
-    rules = [BlockingRule(r, **extra) for r in _REF_RULES]
+    rules = [BlockingRule(r, **extra) for r in _REF_RULES[:n_rules]]
     retain = ["b", "n"] if variant in ("retain", "governed") else []
     left_rows = _ref_rows(1, "s1")
     kw: dict = {}
@@ -787,18 +789,22 @@ def test_block_using_rules_equals_reference(spark, mode, variant):
     )
     got, exp = _multiset(ours, cols), _multiset(want, cols)
     assert sum(exp.values()) > 0
-    assert {k[2] for k in exp} == {0, 1, 2}
+    assert {k[2] for k in exp} == set(range(n_rules))
     assert got == exp
 
 
-def test_or_rule_needs_allow_cartesian_and_then_matches_reference(spark):
+@pytest.mark.parametrize("n_rules", [1, 2])
+def test_or_rule_needs_allow_cartesian_and_then_matches_reference(
+    spark, n_rules
+):
     """A top-level-OR rule has no equi component: the guard refuses it,
-    and with allow_cartesian=True its pairs are exact."""
+    and with allow_cartesian=True its pairs are exact, alone and
+    followed by a keyed rule."""
     df = spark.createDataFrame(_ref_rows(4, "s1"), _REF_SCHEMA)
     rules = [
         BlockingRule("l.a = r.a OR l.b = r.b"),
         BlockingRule("l.n = r.s"),
-    ]
+    ][:n_rules]
     with pytest.raises(ValueError, match="equi component"):
         block_using_rules(df, rules)
     cols = ["unique_id_l", "unique_id_r", "match_key"]

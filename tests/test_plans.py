@@ -128,9 +128,7 @@ def test_tf_joinback_is_broadcast(docs):
 def test_blocking_compiles_to_equi_join(spark, docs):
     """O4: an equi blocking rule with the non-equi ordering predicate
     attached must still plan as a hash-partitioned equi join, never a
-    nested-loop/cartesian (which would be O(n^2) tasks at scale). The
-    plan has three equi joins: the (rule, key) candidate join and the
-    two uid joins that attach each side's row."""
+    nested-loop/cartesian (which would be O(n^2) tasks at scale)."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pairs = block_using_rules(docs, [BlockingRule("l.lang = r.lang")])
@@ -139,26 +137,40 @@ def test_blocking_compiles_to_equi_join(spark, docs):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
-    assert equi == 3, p
+    assert equi == 1, p
 
 
 def test_salted_blocking_is_one_equi_join(spark, docs):
-    """O5: key-append salting must not multiply join nodes — the salt is
-    one more key column of the same candidate join, so a salted rule
-    plans exactly the joins an unsalted one does."""
+    """O5: key-append salting must not multiply join nodes — one rule is
+    ONE join whose key simply gains the salt conjunct."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        plain = block_using_rules(docs, [BlockingRule("l.lang = r.lang")])
         pairs = block_using_rules(
             docs, [BlockingRule("l.lang = r.lang", salting_partitions=4)]
         )
         equi, bad, _ = join_counts(pairs)
         p = plan_str(pairs, mode="simple")
-        equi_plain = join_counts(plain)[0]
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
-    assert equi == equi_plain == 3, p
+    assert equi == 1, p
+
+
+@pytest.mark.parametrize("retain, joins", [([], 1), (["n_chars"], 3)])
+def test_multi_rule_blocking_is_one_keyed_join(spark, docs, retain, joins):
+    """O4 with several rules: ONE (rule, key) join serves every rule and
+    applies first-rule-wins itself; only retained columns add the two
+    uid joins that attach them to the kept pairs."""
+    rules = [BlockingRule("l.lang = r.lang"), BlockingRule("l.source = r.source")]
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pairs = block_using_rules(docs, rules, retain_columns=retain)
+        equi, bad, _ = join_counts(pairs)
+        p = plan_str(pairs, mode="simple")
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert bad == 0, p
+    assert equi == joins, p
 
 
 def test_governed_blocking_broadcasts_hot_branch(spark, docs):
@@ -177,21 +189,30 @@ def test_governed_blocking_broadcasts_hot_branch(spark, docs):
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
     # 4 census probes (semi/anti x l/r) + the hot-branch pair join are all
-    # explicit F.broadcast() joins; the shuffled joins are the normal
-    # branch and the two uid joins that attach each side's row.
+    # explicit F.broadcast() joins; the normal branch is the lone shuffle.
     assert bcast >= 5, p
-    assert _count(p, ("SortMergeJoin", "ShuffledHashJoin")) == 3, p
+    assert _count(p, ("SortMergeJoin", "ShuffledHashJoin")) == 1, p
 
 
-def test_online_matching_broadcasts_new_records(spark, docs, settings_native):
+@pytest.mark.parametrize(
+    "rules", [["l.lang = r.lang"], ["l.lang = r.lang", "l.source = r.source"]]
+)
+def test_online_matching_broadcasts_new_records(
+    spark, docs, settings_native, rules
+):
     """O17: find_matches_to_new_records broadcasts the new-records side
-    into the candidate (rule, key) join, so the base's key table is
-    never shuffled for it, and no branch degrades to a nested loop.
-    Automatic broadcasts are off, so the broadcast comes from the
-    method's own hint."""
+    into the candidate join — keyed on the rule's columns for one rule,
+    on (rule, key) for several — so the base is never shuffled for it,
+    and no branch degrades to a nested loop. Automatic broadcasts are
+    off, so the broadcast comes from the method's own hint."""
+    import dataclasses
+
     from splink_spark.plans.linker import Linker
 
-    linker = Linker(docs, settings_native)
+    settings = dataclasses.replace(
+        settings_native, blocking_rules=[BlockingRule(r) for r in rules]
+    )
+    linker = Linker(docs, settings)
     new = docs.limit(3)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -199,8 +220,9 @@ def test_online_matching_broadcasts_new_records(spark, docs, settings_native):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert _count(p, BAD_JOIN_NODES) == 0, p
+    key = "__key" if len(rules) > 1 else "[lang#"
     candidate_joins = [
-        ln for ln in p.splitlines() if "Join" in ln and "__key" in ln
+        ln for ln in p.splitlines() if "Join" in ln and key in ln
     ]
     assert candidate_joins, p
     assert all(
