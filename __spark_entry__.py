@@ -468,6 +468,17 @@ def _em_session_sql(
     level grid so unobserved levels keep m = 0 rather than vanishing.
     lambda updates as sum(p*cnt)/sum(cnt) each iteration.
 
+    DuckDB (1.0) inlines every reference to a CTE rather than
+    materialising it, so iteration t holds one copy of iteration t-1
+    per reference and the copies multiply across iterations (Spark
+    keeps a CTE referenced more than once as one relation). Each
+    iteration must therefore read the previous one's relations a
+    bounded, small number of times: the unpivot reads ``e{t}`` once
+    (a CROSS JOIN with the comparison names, the gamma picked by
+    CASE) and ``lam{t}`` reads it once more, so ``e{t}`` holds C + 1
+    copies of ``e{t-1}`` (C LEFT JOINs of ``params{t-1}``, one of
+    ``lam{t-1}``).
+
     Surface: (iteration, comparison, gamma_value, m_e9, u_e9,
     lambda_e9) — scaled integers only, hash-robust per the oracle
     type-hygiene rule.
@@ -521,11 +532,16 @@ def _em_session_sql(
             f"(CAST(1.0 AS DOUBLE) - L.lam) * ({produ})) AS p "
             f"FROM h CROSS JOIN lam{prev} L {' '.join(joins)})"
         )
-        unpivot = " UNION ALL ".join(
-            f"SELECT '{comp.output_column_name}' AS comparison, "
-            f"{comp.gamma_column} AS gamma_value, p, pattern_count "
-            f"FROM e{t} WHERE {comp.gamma_column} != -1"
-            for comp in comps
+        names = ", ".join(f"('{c.output_column_name}')" for c in comps)
+        pick = " ".join(
+            f"WHEN '{c.output_column_name}' THEN e.{c.gamma_column}"
+            for c in comps
+        )
+        unpivot = (
+            f"SELECT * FROM (SELECT n.comparison, CASE n.comparison "
+            f"{pick} END AS gamma_value, e.p, e.pattern_count "
+            f"FROM e{t} e CROSS JOIN (VALUES {names}) AS n(comparison)) u "
+            f"WHERE gamma_value != -1"
         )
         ctes.append(
             f"mu{t} AS (SELECT g.comparison, g.gamma_value, "

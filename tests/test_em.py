@@ -5,6 +5,8 @@ reference: tests/test_u_train.py / test_correctness_of_convergence.py).
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pytest
 
@@ -347,3 +349,21 @@ def test_em_session_sql_matches_numpy_em_fit(spark):
         assert r["m_e9"] == round(snap["m"][ci][k] * 1e9), r
         assert r["u_e9"] == round(snap["u"][ci][k] * 1e9), r
         assert r["lambda_e9"] == round(snap["lam"] * 1e9), r
+
+
+def test_em_session_sql_reads_each_iteration_twice():
+    """DuckDB inlines every CTE reference, so each read of ``e{t}``
+    copies the whole of iteration t (and, under it, the blocking and
+    comparison-vector query) into iteration t+1. The O12 text must read
+    ``e{t}`` exactly twice — the M-step unpivot in ``mu{t}`` and
+    ``lam{t}`` — or the copies compound per iteration (a per-comparison
+    UNION ALL unpivot ran DuckDB out of memory at three iterations)."""
+    import __spark_entry__ as entrymod
+
+    settings = entrymod.documents_settings()
+    sql = entrymod._em_session_sql(
+        settings, settings.probability_two_random_records_match, 3, "h0"
+    )
+    for t in (1, 2, 3):
+        reads = re.findall(rf"\b(?:FROM|JOIN) e{t}\b", sql)
+        assert len(reads) == 2, (t, reads)
