@@ -25,10 +25,8 @@ Spark-first design (NOT a port): one blocking-key table, one keyed join.
 - One rule is joined on its own condition over whole frames, which
   Spark keys on the raw equi components: no hash and no attach, and a
   table bucketed on those columns blocks with no Exchange.
-- Rules with NO equi component would be cartesian products; they are
-  rejected unless ``allow_cartesian=True``. Alone, such a rule plans as
-  a nested-loop join; among several it is ONE constant-key block, one
-  task.
+- Rules with NO equi component (a top-level OR included) would be
+  cartesian products; they are refused.
 - Salting: key-append, on the same join. The left side's rows carry
   ``pmod(xxhash64(uid), N)`` for a rule salted N ways; the right
   side's rows are replicated under salts 0..N-1 in the same generate,
@@ -45,9 +43,11 @@ Spark-first design (NOT a port): one blocking-key table, one keyed join.
   conjoins ``l.source_dataset <> r.source_dataset``
   (reference: splink/blocking.py::block_using_rules_sql link_only
   semantics).
-- Block census (O19): the cheap estimate is a ``groupBy(key).count()``
-  then ``sum(c*(c-1)/2)`` — an aggregation with NO join, the right way to
-  size blocks at web scale before committing to the pair explosion.
+- Censuses: the governor and ``tune_blocking_rules`` share one,
+  ``_key_census``, over the key tables — block sizes are ``(__rule,
+  __key)`` multiplicities. O19/O20's ``block_census`` groups raw
+  columns (NULL blocks counted), then ``sum(c*(c-1)/2)``: the no-join
+  pre-flight size of a rule.
 """
 
 from __future__ import annotations
@@ -55,6 +55,7 @@ from __future__ import annotations
 import dataclasses
 import functools
 import math
+import operator
 import re
 
 from pyspark.sql import DataFrame
@@ -86,7 +87,7 @@ def rule_has_equi_component(rule: str) -> bool:
     """True if the rule has a top-level AND-conjunct equality
     ``f(l) = g(r)`` (``extract_equi_components``). Only such a rule can
     be a keyed join; anything else (a top-level OR included) would be a
-    cartesian product and needs ``allow_cartesian=True``."""
+    cartesian product and is refused."""
     return bool(extract_equi_components(rule))
 
 
@@ -237,29 +238,20 @@ def _rule_keys(
     df: DataFrame,
     right: DataFrame,
     rules: list[BlockingRule],
-    allow_cartesian: bool,
 ) -> list[tuple[str, str]]:
     """Per rule, the (left, right) SQL of its blocking key: xxhash64 over
     the rule's equi components, NULL when any component is NULL (an
     equality over NULL never holds). Components whose two sides differ
     in type are cast to the type Spark compares them in, so equal
-    values hash equally. A rule without equi components (only with
-    ``allow_cartesian``) keys every row on one constant block."""
+    values hash equally. A rule without equi components is refused."""
     comps = []
     for br in rules:
         equi = extract_equi_components(br.rule)
-        if not equi and not allow_cartesian:
+        if not equi:
             raise ValueError(
-                f"blocking rule {br.rule!r} has no equi component; it would "
-                "plan as a nested-loop cartesian join. Pass "
-                "allow_cartesian=True only if you really mean it (among "
-                "several rules, its pairs are then generated by one task)."
-            )
-        if not equi and br.broadcast_hot_keys_above > 0:
-            raise ValueError(
-                f"broadcast_hot_keys_above set on rule {br.rule!r}, but no "
-                "top-level AND-conjunct equi component could be extracted "
-                "(an OR rule cannot be hot-key split exactly)"
+                f"blocking rule {br.rule!r} has no top-level AND-conjunct "
+                "equi component f(l) = g(r); it would plan as a cartesian "
+                "join"
             )
         comps.append(equi)
     flat = [c for equi in comps for c in equi]
@@ -271,8 +263,6 @@ def _rule_keys(
     )
 
     def key(parts: list[str]) -> str:
-        if not parts:
-            return "CAST(0 AS BIGINT)"
         not_null = " AND ".join(f"{p} IS NOT NULL" for p in parts)
         return f"CASE WHEN {not_null} THEN xxhash64({', '.join(parts)}) END"
 
@@ -314,6 +304,24 @@ def _key_table(
     return frame.alias(alias).select(*[F.col(f"{alias}.{c}") for c in cols], *gen)
 
 
+def _key_census(lkt: DataFrame, rkt: DataFrame, two_table: bool) -> DataFrame:
+    """Block census over the key tables: ``(__rule, __key, n, n_b)`` per
+    non-NULL key. ``n`` is the block size — left rows, plus each right
+    record once (its salt-0 replica) for two tables; ``n_b`` counts the
+    rows of the side the governor broadcasts, the right one, which in
+    dedupe IS the left."""
+    keys = lkt.select("__rule", "__key", F.lit(0 if two_table else 1).alias("__b"))
+    if two_table:
+        keys = keys.unionByName(
+            rkt.where("__salt = 0").select("__rule", "__key", F.lit(1).alias("__b"))
+        )
+    return (
+        keys.where("__key IS NOT NULL")
+        .groupBy("__rule", "__key")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("__b").alias("n_b"))
+    )
+
+
 def _hot_split(
     lkt: DataFrame,
     rkt: DataFrame,
@@ -327,37 +335,36 @@ def _hot_split(
     is broadcast, so an oversized block's n² pair work spreads over
     the left side's partitions instead of one shuffle reducer.
 
-    The split is exact: both sides of a candidate carry the same
-    (rule, key), so each candidate comes from exactly one branch.
-    Block sizes count left keys, plus right keys for two tables (each
-    right record once: its salt-0 replica)."""
+    The hot (rule, key) set is collected once (a rule has fewer than
+    rows / threshold hot keys) and split on per rule by ``__key IN``.
+    Any hot set splits exactly: both sides of a candidate carry the
+    same (rule, key). With no hot key the join is the ungoverned one."""
     thr = {
         i: br.broadcast_hot_keys_above
         for i, br in enumerate(rules)
         if br.broadcast_hot_keys_above > 0
     }
-    keys = lkt.select("__rule", "__key")
-    if two_table:
-        keys = keys.unionByName(
-            rkt.where("__salt = 0").select("__rule", "__key")
-        )
     limit = "CASE __rule " + " ".join(
         f"WHEN {i} THEN {t}" for i, t in thr.items()
     ) + " END"
-    hot = F.broadcast(
-        keys.where(F.col("__rule").isin(list(thr)))
-        .groupBy("__rule", "__key")
-        .count()
-        .where(F.col("count") > F.expr(limit))
+    hot_keys: dict[int, list[int]] = {}
+    for r in (
+        _key_census(lkt, rkt, two_table)
+        .where(F.col("__rule").isin(list(thr)) & (F.col("n") > F.expr(limit)))
         .select("__rule", "__key")
-    )
-    k = ["__rule", "__key"]
+        .collect()
+    ):
+        hot_keys.setdefault(r["__rule"], []).append(r["__key"])
+    if not hot_keys:
+        return [(lkt, rkt)]
+    hot = functools.reduce(operator.or_, [
+        (F.col("__rule") == i) & F.col("__key").isin(ks)
+        for i, ks in sorted(hot_keys.items())
+    ])
+    normal = ~F.coalesce(hot, F.lit(False))
     return [
-        (lkt.join(hot, k, "left_anti"), rkt.join(hot, k, "left_anti")),
-        (
-            lkt.join(hot, k, "left_semi"),
-            F.broadcast(rkt.join(hot, k, "left_semi")),
-        ),
+        (lkt.where(normal), rkt.where(normal)),
+        (lkt.where(hot), F.broadcast(rkt.where(hot))),
     ]
 
 
@@ -368,7 +375,6 @@ def block_using_rules(
     retain_columns: list[str] | None = None,
     link_mode: bool = False,
     source_col: str = "source_dataset",
-    allow_cartesian: bool = False,
     df_right: DataFrame | None = None,
     link_only: bool = False,
     pair_ordering: bool = True,
@@ -395,7 +401,7 @@ def block_using_rules(
     if retain_columns is None:
         retain_columns = []
     right = df_right if df_right is not None else df
-    keys = _rule_keys(df, right, rules, allow_cartesian)
+    keys = _rule_keys(df, right, rules)
 
     ids = [uid] + ([source_col] if link_mode or link_only else [])
     one = len(rules) == 1
@@ -692,17 +698,18 @@ def tune_blocking_rules(
     pair workload one shuffle reducer should absorb.
 
     The threshold in ROWS is floor((1+sqrt(1+8*target))/2), the block
-    size whose pair count hits the target. One aggregation pass per
-    rule; only scalar stats reach the driver, so this is safe to run on
-    the full corpus at any scale. Rules without extractable equi
-    conjuncts (top-level OR) are passed through unchanged and flagged
-    in the report.
+    size whose pair count hits the target. Every rule is censused in
+    one aggregation over its key table (``_key_census``, the governor's
+    own census, so the tuner counts the hashed, type-cast keys the join
+    joins); only per-rule scalar stats reach the driver, so this is
+    safe to run on the full corpus at any scale. Rules without
+    extractable equi conjuncts (top-level OR) are passed through
+    unchanged and flagged in the report.
 
-    Link mode: pass ``df_right`` and the census counts the UNION of
-    left-key and right-key expressions — the same hot-key definition
-    the governor in ``block_using_rules`` applies — so a hot key concentrated on either
-    side is seen. Asymmetric rules (``l.a = r.b``) are censused on
-    their own side's expression.
+    Link mode: pass ``df_right`` and the census counts left keys plus
+    right keys — the same hot-key definition the governor applies — so
+    a hot key concentrated on either side is seen. Asymmetric rules
+    (``l.a = r.b``) are censused on their own side's expression.
 
     Broadcast safety is bounded in BOTH rows and bytes: the governor
     broadcasts the RIGHT side's hot rows with all retained columns, so
@@ -721,77 +728,62 @@ def tune_blocking_rules(
     threshold = int((1 + math.isqrt(1 + 8 * target_block_pairs)) // 2)
     bcast_side = df_right if df_right is not None else df
     avg_row_bytes = estimate_avg_row_bytes(bcast_side, width_sample_rows)
+    gov = [i for i, br in enumerate(rules) if extract_equi_components(br.rule)]
+    stats: dict[int, dict] = {}
+    if gov:
+        keys = list(zip(gov, _rule_keys(df, bcast_side, [rules[i] for i in gov])))
+        lkt = _key_table(df, "l", [], [(i, k, "0") for i, (k, _) in keys])
+        rkt = _key_table(bcast_side, "r", [], [(i, k, "0") for i, (_, k) in keys])
+        pairs = F.col("n") * (F.col("n") - 1) / 2
+        hot_cond = F.col("n") > threshold
+
+        def hot_sum(c):
+            return F.sum(F.when(hot_cond, c).otherwise(F.lit(0)))
+
+        census = _key_census(lkt, rkt, df_right is not None).groupBy("__rule")
+        stats = {
+            r["__rule"]: r.asDict()
+            for r in census.agg(
+                F.max("n").alias("max_block"),
+                F.expr("percentile_approx(n, 0.99)").alias("p99_block"),
+                F.count(F.lit(1)).alias("n_blocks"),
+                F.sum(pairs).alias("total_pairs"),
+                hot_sum(F.lit(1)).alias("hot_blocks"),
+                hot_sum(pairs).alias("hot_pairs"),
+                hot_sum(F.col("n")).alias("hot_rows"),
+                hot_sum(F.col("n_b")).alias("hot_bcast_rows"),
+            ).collect()
+        }
     tuned: list[BlockingRule] = []
     report: list[dict] = []
-    for br in rules:
-        equi = extract_equi_components(br.rule)
-        if not equi:
+    for i, br in enumerate(rules):
+        if i not in gov:
             tuned.append(br)
             report.append(
                 {"rule": br.rule, "governable": False, "reason": "no equi conjuncts"}
             )
             continue
-        kn = [f"__tk{i}" for i in range(len(equi))]
-        l_keys = [F.expr(a).alias(k) for (a, _), k in zip(equi, kn)]
-        # __bc marks rows of the side the governor broadcasts (its hot
-        # branch broadcasts the right side; in dedupe mode right IS df,
-        # so every row counts against the broadcast budget).
-        if df_right is not None:
-            r_keys = [F.expr(b).alias(k) for (_, b), k in zip(equi, kn)]
-            keyed = df.alias("l").select(*l_keys).withColumn(
-                "__bc", F.lit(0)
-            ).unionByName(
-                df_right.alias("r").select(*r_keys).withColumn("__bc", F.lit(1))
-            )
-        else:
-            keyed = df.alias("l").select(*l_keys).withColumn("__bc", F.lit(1))
-        census = (
-            keyed.na.drop(subset=kn)
-            .groupBy(*kn)
-            .agg(
-                F.count(F.lit(1)).alias("c"),
-                F.sum("__bc").alias("cb"),
-            )
-        )
-        pairs = F.col("c") * (F.col("c") - 1) / 2
-        hot_cond = F.col("c") > threshold
-        stats = census.agg(
-            F.max("c").alias("max_block"),
-            F.expr("percentile_approx(c, 0.99)").alias("p99_block"),
-            F.count(F.lit(1)).alias("n_blocks"),
-            F.sum(pairs).alias("total_pairs"),
-            F.sum(F.when(hot_cond, F.lit(1)).otherwise(F.lit(0))).alias(
-                "hot_blocks"
-            ),
-            F.sum(F.when(hot_cond, pairs).otherwise(F.lit(0))).alias(
-                "hot_pairs"
-            ),
-            F.sum(F.when(hot_cond, F.col("c")).otherwise(F.lit(0))).alias(
-                "hot_rows"
-            ),
-            F.sum(F.when(hot_cond, F.col("cb")).otherwise(F.lit(0))).alias(
-                "hot_bcast_rows"
-            ),
-        ).collect()[0]
-        hot = int(stats["hot_blocks"] or 0)
-        hot_rows = int(stats["hot_rows"] or 0)
-        hot_bcast_rows = int(stats["hot_bcast_rows"] or 0)
+        # a rule whose every key is NULL has no census row
+        st = stats.get(i, {})
+        hot = int(st.get("hot_blocks") or 0)
+        hot_rows = int(st.get("hot_rows") or 0)
+        hot_bcast_rows = int(st.get("hot_bcast_rows") or 0)
         hot_bcast_bytes = int(hot_bcast_rows * avg_row_bytes)
-        total = float(stats["total_pairs"] or 0.0)
+        total = float(st.get("total_pairs") or 0.0)
         row = {
             "rule": br.rule,
             "governable": True,
             "threshold_rows": threshold,
-            "max_block": int(stats["max_block"] or 0),
-            "p99_block": int(stats["p99_block"] or 0),
-            "n_blocks": int(stats["n_blocks"] or 0),
+            "max_block": int(st.get("max_block") or 0),
+            "p99_block": int(st.get("p99_block") or 0),
+            "n_blocks": int(st.get("n_blocks") or 0),
             "hot_blocks": hot,
             "hot_rows": hot_rows,
             "hot_bcast_rows": hot_bcast_rows,
             "avg_row_bytes": round(avg_row_bytes, 1),
             "hot_bcast_bytes_est": hot_bcast_bytes,
             "hot_pair_fraction": (
-                float(stats["hot_pairs"] or 0.0) / total if total else 0.0
+                float(st.get("hot_pairs") or 0.0) / total if total else 0.0
             ),
         }
         if (

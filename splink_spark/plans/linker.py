@@ -176,8 +176,9 @@ class Linker:
         exceed ``target_block_pairs``, and fall back to salting when
         the hot side would not broadcast safely (row AND byte budgets).
         Updates ``settings.blocking_rules`` in place and returns the
-        per-rule census report. One aggregation pass per rule; only
-        scalar stats reach the driver.
+        per-rule census report. One aggregation over the rules' key
+        table censuses every rule; only per-rule scalar stats reach
+        the driver.
 
         reference: n/a (skew governance is a north-rule addition; see
         operators/blocking.py::tune_blocking_rules).

@@ -540,6 +540,48 @@ def test_tune_blocking_rules_byte_budget_fallback(spark):
     assert tuned2[0].broadcast_hot_keys_above == 32
 
 
+def test_tune_blocking_rules_one_census_for_any_rule_count(spark):
+    """The tuner censuses every governable rule in one action: one rule
+    and three rules run the same number of Spark jobs (AQE may split
+    the action into a few jobs, but the count must not grow with the
+    rules), and a rule's report does not depend on its neighbours."""
+    from splink_spark.operators.blocking import tune_blocking_rules
+
+    rows = [
+        (i, "hot" if i < 70 else f"k{i % 10}", i % 2, f"c{i % 5}")
+        for i in range(130)
+    ]
+    df = spark.createDataFrame(
+        rows, "unique_id long, key string, grp long, city string"
+    )
+    rules = [
+        BlockingRule("l.key = r.key"),
+        BlockingRule("l.grp = r.grp"),
+        BlockingRule("l.city = r.city"),
+    ]
+    sc = spark.sparkContext
+
+    def run(rs, group):
+        sc.setJobGroup(group, "tuner")
+        try:
+            _, report = tune_blocking_rules(df, rs, target_block_pairs=500)
+            return report, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setJobGroup(None, None)
+
+    one, jobs_one = run(rules[:1], "tune_one_rule")
+    three, jobs_three = run(rules, "tune_three_rules")
+    assert jobs_one == jobs_three
+    assert three[0] == one[0]
+    assert [r["max_block"] for r in three] == [70, 65, 26]
+    # a rule whose every key is NULL has no block and stays as it is
+    nulls = df.withColumn("z", F.lit(None).cast("string"))
+    rule = BlockingRule("l.z = r.z")
+    tuned, (row,) = tune_blocking_rules(nulls, [rule], target_block_pairs=500)
+    assert tuned == [rule]
+    assert (row["n_blocks"], row["max_block"], row["hot_blocks"]) == (0, 0, 0)
+
+
 def test_rule_tokenizer_quote_aware():
     """String literals containing AND/OR, parens, or '=' must not
     corrupt conjunct splitting or equi extraction (ADVICE r4)."""
@@ -794,12 +836,10 @@ def test_block_using_rules_equals_reference(spark, mode, variant, n_rules):
 
 
 @pytest.mark.parametrize("n_rules", [1, 2])
-def test_or_rule_needs_allow_cartesian_and_then_matches_reference(
-    spark, n_rules
-):
-    """A top-level-OR rule has no equi component: the guard refuses it,
-    and with allow_cartesian=True its pairs are exact, alone and
-    followed by a keyed rule."""
+def test_or_rule_is_refused(spark, n_rules):
+    """A top-level-OR rule has no equi component, so it would be a
+    cartesian product: the guard refuses it, alone and followed by a
+    keyed rule."""
     df = spark.createDataFrame(_ref_rows(4, "s1"), _REF_SCHEMA)
     rules = [
         BlockingRule("l.a = r.a OR l.b = r.b"),
@@ -807,17 +847,6 @@ def test_or_rule_needs_allow_cartesian_and_then_matches_reference(
     ][:n_rules]
     with pytest.raises(ValueError, match="equi component"):
         block_using_rules(df, rules)
-    cols = ["unique_id_l", "unique_id_r", "match_key"]
-    ours = block_using_rules(df, rules, allow_cartesian=True)
-    want = _reference_pairs(
-        df,
-        df,
-        rules,
-        ordering="l.unique_id < r.unique_id",
-        link_only=False,
-        cols=cols,
-    )
-    assert _multiset(ours, cols) == _multiset(want, cols)
 
 
 def test_alias_case_and_backticks(spark):

@@ -174,9 +174,11 @@ def test_multi_rule_blocking_is_one_keyed_join(spark, docs, retain, joins):
 
 
 def test_governed_blocking_broadcasts_hot_branch(spark, docs):
-    """O5b: with a hot-key threshold the plan splits — the hot branch and
-    the semi/anti census probes are broadcast joins, and no branch
-    degrades to a nested loop."""
+    """O5b: with a hot-key threshold the plan splits — the hot branch is
+    a broadcast join, the normal branch the lone shuffled one, and no
+    branch degrades to a nested loop. The hot set is collected before
+    the join is planned, so the returned plan holds no census
+    aggregation and no semi/anti membership join."""
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         pairs = block_using_rules(
@@ -188,10 +190,30 @@ def test_governed_blocking_broadcasts_hot_branch(spark, docs):
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert bad == 0, p
-    # 4 census probes (semi/anti x l/r) + the hot-branch pair join are all
-    # explicit F.broadcast() joins; the normal branch is the lone shuffle.
-    assert bcast >= 5, p
+    assert bcast == 1, p
     assert _count(p, ("SortMergeJoin", "ShuffledHashJoin")) == 1, p
+    assert _count(p, ("HashAggregate", "LeftSemi", "LeftAnti")) == 0, p
+
+
+def test_governed_blocking_without_hot_keys_plans_as_ungoverned(spark, docs):
+    """O5b: a threshold above every block (sf0.001 ``lang`` blocks hold
+    71-193 rows) leaves no hot key, and the governed call plans exactly
+    like the ungoverned one."""
+    import re
+
+    def plan(rule):
+        p = plan_str(block_using_rules(docs, [rule]))
+        return re.sub(r"(#|plan_id=)\d+", r"\1", p)
+
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        governed = plan(
+            BlockingRule("l.lang = r.lang", broadcast_hot_keys_above=1000)
+        )
+        plain = plan(BlockingRule("l.lang = r.lang"))
+    finally:
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert governed == plain, governed
 
 
 @pytest.mark.parametrize(

@@ -8,10 +8,12 @@ from __future__ import annotations
 import decimal
 import math
 import sys
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# this checkout's engine and queries, wherever it is run from
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from splink_spark.session import get_spark  # noqa: E402
