@@ -28,8 +28,14 @@ rows (thousands, not the corpus), which stays feasible at any corpus
 size. Disabling auto-broadcast reproduces the at-scale regime on the
 small fixture; both legs run under the same setting.
 
+``--hot-keys K`` spreads the planted rows over K (domain, title) keys
+instead of one; ``--link`` blocks the even-id pages against the odd-id
+ones (``df_right``, the two-table shape of incremental linkage).
+``hot_blocks`` in the output counts the blocks above the threshold that
+yield pairs — the governor broadcasts at most 1000 of them per call.
+
 Usage: python BENCH/run_skew.py [--entities 8000] [--cores 8]
-       [--hot-permille 150] [--pairs 3]
+       [--hot-permille 150] [--hot-keys 1] [--link] [--pairs 3]
 Prints ONE JSON line.
 """
 
@@ -69,6 +75,8 @@ def main() -> None:
     ap.add_argument("--hot-permille", type=int, default=150)
     ap.add_argument("--pairs", type=int, default=3)
     ap.add_argument("--threshold", type=int, default=500)
+    ap.add_argument("--hot-keys", type=int, default=1)
+    ap.add_argument("--link", action="store_true")
     args = ap.parse_args()
 
     spark = get_spark(
@@ -84,19 +92,40 @@ def main() -> None:
     # Plant the hot block AFTER key derivation: ~hot_permille/1000 of
     # all pages share one (domain, title) blocking key — the popular-
     # domain / empty-title pathology the north rule names. Minhash-band
-    # keys are left untouched.
+    # keys are left untouched. With --hot-keys K the planted rows are
+    # hashed over K titles.
     hot = F.pmod(F.col("unique_id"), F.lit(1000)) < F.lit(args.hot_permille)
+    hot_title = F.concat(
+        F.lit("hot-title-"), F.pmod(F.xxhash64("unique_id"), F.lit(args.hot_keys))
+    )
     prepared = (
         prepared.withColumn(
             "bk_domain", F.when(hot, F.lit("hot.example")).otherwise(F.col("bk_domain"))
         )
         .withColumn(
-            "bk_title", F.when(hot, F.lit("hot-title")).otherwise(F.col("bk_title"))
+            "bk_title", F.when(hot, hot_title).otherwise(F.col("bk_title"))
         )
         .persist()
     )
     n_pages = prepared.count()
     n_hot = prepared.filter(F.col("bk_domain") == "hot.example").count()
+    side = F.pmod(F.col("unique_id"), F.lit(2))
+    if args.link:
+        left, right = prepared.where(side == 0), prepared.where(side == 1)
+        link_kw = dict(df_right=right, pair_ordering=False)
+    else:
+        left, link_kw = prepared, {}
+    # blocks of the governed rule above the threshold, with pairs
+    blocks = prepared.groupBy("bk_domain", "bk_title").agg(
+        F.count(F.lit(1)).alias("n"), F.sum(side).alias("n_odd")
+    )
+    if args.link:
+        blocks = blocks.where("n_odd > 0 AND n > n_odd")
+    hot_blocks = blocks.where(
+        F.col("bk_domain").isNotNull()
+        & F.col("bk_title").isNotNull()
+        & (F.col("n") > args.threshold)
+    ).count()
 
     settings = web_dedupe_settings()
     base_rules = settings.blocking_rules
@@ -110,10 +139,11 @@ def main() -> None:
     def run_leg(rules: list[BlockingRule]) -> tuple[float, tuple]:
         t0 = time.time()
         pairs = block_using_rules(
-            prepared,
+            left,
             rules,
             uid="unique_id",
             retain_columns=["text_tokens", "bk_title", "bk_domain"],
+            **link_kw,
         )
         scored = predict_from_comparison_vectors(
             compute_comparison_vectors(pairs, settings), settings
@@ -156,6 +186,9 @@ def main() -> None:
                 "unit": "x",
                 "pages": n_pages,
                 "hot_block_rows": n_hot,
+                "hot_keys_planted": args.hot_keys,
+                "hot_blocks": hot_blocks,
+                "link": args.link,
                 "scored_pairs": n_pairs,
                 "cores": args.cores,
                 "threshold_rows": args.threshold,

@@ -55,7 +55,6 @@ from __future__ import annotations
 import dataclasses
 import functools
 import math
-import operator
 import re
 
 from pyspark.sql import DataFrame
@@ -65,6 +64,7 @@ from pyspark.sql.types import DataType
 from splink_spark.model import BlockingRule
 
 MATCH_KEY_COLUMN = "match_key"
+_HOT_KEYS = 1000  # most (rule, key) blocks the skew governor broadcasts
 
 
 def _ordering_condition(link_mode: bool, uid: str, source_col: str) -> str:
@@ -335,10 +335,12 @@ def _hot_split(
     is broadcast, so an oversized block's n² pair work spreads over
     the left side's partitions instead of one shuffle reducer.
 
-    The hot (rule, key) set is collected once (a rule has fewer than
-    rows / threshold hot keys) and split on per rule by ``__key IN``.
-    Any hot set splits exactly: both sides of a candidate carry the
-    same (rule, key). With no hot key the join is the ungoverned one."""
+    The hot (rule, key) set is collected once, while the plan is built,
+    and split on by one SQL ``__key IN`` list per rule. Any hot set
+    splits exactly (both sides of a candidate carry the same key), so
+    it keeps only blocks that yield pairs and the ``_HOT_KEYS`` largest:
+    the list is planned on every call, and many hot blocks spread over
+    reducers anyway. With no hot key the join is the ungoverned one."""
     thr = {
         i: br.broadcast_hot_keys_above
         for i, br in enumerate(rules)
@@ -347,20 +349,20 @@ def _hot_split(
     limit = "CASE __rule " + " ".join(
         f"WHEN {i} THEN {t}" for i, t in thr.items()
     ) + " END"
-    hot_keys: dict[int, list[int]] = {}
-    for r in (
-        _key_census(lkt, rkt, two_table)
-        .where(F.col("__rule").isin(list(thr)) & (F.col("n") > F.expr(limit)))
-        .select("__rule", "__key")
-        .collect()
-    ):
-        hot_keys.setdefault(r["__rule"], []).append(r["__key"])
+    census = _key_census(lkt, rkt, two_table).where(
+        F.col("__rule").isin(list(thr)) & (F.col("n") > F.expr(limit))
+    )
+    if two_table:
+        census = census.where("n_b > 0 AND n > n_b")
+    hot_keys: dict[int, list[str]] = {}
+    for r in census.orderBy(F.desc("n")).limit(_HOT_KEYS).collect():
+        hot_keys.setdefault(r["__rule"], []).append(f"{r['__key']}L")
     if not hot_keys:
         return [(lkt, rkt)]
-    hot = functools.reduce(operator.or_, [
-        (F.col("__rule") == i) & F.col("__key").isin(ks)
+    hot = F.expr(" OR ".join(
+        f"(__rule = {i} AND __key IN ({', '.join(ks)}))"
         for i, ks in sorted(hot_keys.items())
-    ])
+    ))
     normal = ~F.coalesce(hot, F.lit(False))
     return [
         (lkt.where(normal), rkt.where(normal)),
@@ -393,6 +395,10 @@ def block_using_rules(
     base-vs-new incremental linkage, where every (l, r) combination is
     already unique and an ordering predicate over composite ids would
     silently drop pairs.
+
+    A governed rule runs its census job here, when the DataFrame is
+    built (``explain()`` pays it too); a governed online request thus
+    aggregates the whole base key table each time.
 
     The join design is in the module docstring. Precondition, as for
     the whole linkage model: the uid (with the source column in link
