@@ -461,11 +461,13 @@ def _em_session_sql(
 
     Unlike the single-step mirrors (o10/o11) the per-iteration m/u are
     RELATIONS, not literals: ``params{t}`` carries (comparison,
-    gamma_value, m, u); the E-step joins the histogram to ``params{t}``
-    once per comparison (LEFT JOIN + coalesce(.,1.0) so gamma = -1
-    contributes factor 1); the M-step unpivots the gammas, aggregates
-    posterior mass, and window-normalises per comparison over the full
-    level grid so unobserved levels keep m = 0 rather than vanishing.
+    gamma_value, m, u); the E-step cross-joins the histogram with
+    ``params{t}`` pivoted to one row (``pw{t}``) and picks each
+    comparison's factor by CASE on its gamma (coalesce(.,1.0) so
+    gamma = -1 contributes factor 1); the M-step unpivots the gammas,
+    aggregates posterior mass, and window-normalises per comparison
+    over the full level grid so unobserved levels keep m = 0 rather
+    than vanishing.
     lambda updates as sum(p*cnt)/sum(cnt) each iteration.
 
     DuckDB (1.0) inlines every reference to a CTE rather than
@@ -475,9 +477,9 @@ def _em_session_sql(
     iteration must therefore read the previous one's relations a
     bounded, small number of times: the unpivot reads ``e{t}`` once
     (a CROSS JOIN with the comparison names, the gamma picked by
-    CASE) and ``lam{t}`` reads it once more, so ``e{t}`` holds C + 1
-    copies of ``e{t-1}`` (C LEFT JOINs of ``params{t-1}``, one of
-    ``lam{t-1}``).
+    CASE) and ``lam{t}`` reads it once more, and ``e{t}`` reads
+    ``pw{t-1}`` once and ``lam{t-1}`` once, so ``e{t}`` holds two
+    copies of ``e{t-1}`` whatever the number of comparisons.
 
     Surface: (iteration, comparison, gamma_value, m_e9, u_e9,
     lambda_e9) — scaled integers only, hash-robust per the oracle
@@ -511,26 +513,36 @@ def _em_session_sql(
         f"lam0 AS (SELECT CAST({lam_init!r} AS DOUBLE) AS lam)",
     ]
 
+    def factor(col: str, i: int, comp) -> str:
+        # the level's m or u for this row's gamma; 1.0 for gamma = -1
+        whens = " ".join(
+            f"WHEN {k} THEN P.{col}{i}_{k}"
+            for k in range(len(comp.scored_levels))
+        )
+        return (
+            f"coalesce(CASE h.{comp.gamma_column} {whens} END, "
+            f"CAST(1.0 AS DOUBLE))"
+        )
+
     for t in range(1, n_iter + 1):
         prev = t - 1
-        joins, m_fac, u_fac = [], [], []
-        for i, comp in enumerate(comps):
-            a = f"j{i}"
-            joins.append(
-                f"LEFT JOIN params{prev} {a} ON {a}.comparison = "
-                f"'{comp.output_column_name}' AND {a}.gamma_value = "
-                f"h.{comp.gamma_column}"
-            )
-            m_fac.append(f"coalesce({a}.m, CAST(1.0 AS DOUBLE))")
-            u_fac.append(f"coalesce({a}.u, CAST(1.0 AS DOUBLE))")
-        prodm = " * ".join(m_fac)
-        produ = " * ".join(u_fac)
+        # params{prev} pivoted to one row, so e{t} reads it once
+        pivot = ", ".join(
+            f"max(CASE WHEN comparison = '{comp.output_column_name}' "
+            f"AND gamma_value = {k} THEN {col} END) AS {col}{i}_{k}"
+            for i, comp in enumerate(comps)
+            for k in range(len(comp.scored_levels))
+            for col in ("m", "u")
+        )
+        ctes.append(f"pw{prev} AS (SELECT {pivot} FROM params{prev})")
+        prodm = " * ".join(factor("m", i, c) for i, c in enumerate(comps))
+        produ = " * ".join(factor("u", i, c) for i, c in enumerate(comps))
         gamma_cols = ", ".join(f"h.{c.gamma_column}" for c in comps)
         ctes.append(
             f"e{t} AS (SELECT {gamma_cols}, h.pattern_count, "
             f"(L.lam * ({prodm})) / (L.lam * ({prodm}) + "
             f"(CAST(1.0 AS DOUBLE) - L.lam) * ({produ})) AS p "
-            f"FROM h CROSS JOIN lam{prev} L {' '.join(joins)})"
+            f"FROM h CROSS JOIN lam{prev} L CROSS JOIN pw{prev} P)"
         )
         names = ", ".join(f"('{c.output_column_name}')" for c in comps)
         pick = " ".join(

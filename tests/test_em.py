@@ -367,3 +367,32 @@ def test_em_session_sql_reads_each_iteration_twice():
     for t in (1, 2, 3):
         reads = re.findall(rf"\b(?:FROM|JOIN) e{t}\b", sql)
         assert len(reads) == 2, (t, reads)
+    # and e{t} itself holds two copies of e{t-1}, whatever the number
+    # of comparisons: one through the pivoted params, one through lam
+    ctes = _cte_bodies(sql)
+
+    def copies(name, of):
+        return sum(
+            1 if ref == of else copies(ref, of)
+            for ref in re.findall(r"\b(?:FROM|JOIN) (\w+)", ctes[name])
+            if ref in ctes
+        )
+
+    assert len(settings.comparisons) > 1
+    for t in (2, 3):
+        assert copies(f"e{t}", f"e{t - 1}") == 2, t
+
+
+def _cte_bodies(sql):
+    """name -> body of each top-level ``name AS (...)`` of a WITH list."""
+    bodies, depth, name, start = {}, 0, None, 0
+    for m in re.finditer(r"\b(\w+) AS \(|\(|\)", sql):
+        if m.group(0) == ")":
+            depth -= 1
+            if depth == 0 and name:
+                bodies[name], name = sql[start:m.start()], None
+            continue
+        if depth == 0 and m.group(1):
+            name, start = m.group(1), m.end()
+        depth += 1
+    return bodies
