@@ -468,18 +468,20 @@ def _em_session_sql(
     aggregates posterior mass, and window-normalises per comparison
     over the full level grid so unobserved levels keep m = 0 rather
     than vanishing.
-    lambda updates as sum(p*cnt)/sum(cnt) each iteration.
+    lambda updates as sum(p*cnt)/sum(cnt) each iteration: the grid
+    carries a pseudo-comparison ``__lambda`` whose gamma is 0 on every
+    row, so its M-step row has m_num = sum(p*cnt) and m_num + u_num =
+    sum(cnt), and ``pw{t}`` carries lambda beside the pivoted m/u.
 
     DuckDB (1.0) inlines every reference to a CTE rather than
     materialising it, so iteration t holds one copy of iteration t-1
     per reference and the copies multiply across iterations (Spark
     keeps a CTE referenced more than once as one relation). Each
-    iteration must therefore read the previous one's relations a
-    bounded, small number of times: the unpivot reads ``e{t}`` once
-    (a CROSS JOIN with the comparison names, the gamma picked by
-    CASE) and ``lam{t}`` reads it once more, and ``e{t}`` reads
-    ``pw{t-1}`` once and ``lam{t-1}`` once, so ``e{t}`` holds two
-    copies of ``e{t-1}`` whatever the number of comparisons.
+    iteration therefore reads the previous one exactly once along the
+    chain ``e{t} <- pw{t-1} <- params{t-1} <- mu{t-1} <- e{t-1}``: the
+    unpivot reads ``e{t}`` once (a CROSS JOIN with the comparison
+    names, the gamma picked by CASE) and lambda comes out of the same
+    aggregate, so DuckDB's time grows linearly with the iterations.
 
     Surface: (iteration, comparison, gamma_value, m_e9, u_e9,
     lambda_e9) — scaled integers only, hash-robust per the oracle
@@ -498,6 +500,7 @@ def _em_session_sql(
                 f"CAST({lv.u_probability!r} AS DOUBLE))"
             )
             grid_rows.append(f"('{comp.output_column_name}', {k})")
+    grid_rows.append("('__lambda', 0)")
     ctes = [
         f"h AS (SELECT * FROM {hist_rel})",
         (
@@ -510,7 +513,6 @@ def _em_session_sql(
             + ", ".join(p0_rows)
             + ") AS p(comparison, gamma_value, m, u))"
         ),
-        f"lam0 AS (SELECT CAST({lam_init!r} AS DOUBLE) AS lam)",
     ]
 
     def factor(col: str, i: int, comp) -> str:
@@ -524,36 +526,40 @@ def _em_session_sql(
             f"CAST(1.0 AS DOUBLE))"
         )
 
+    # params{t} pivoted to one row beside lambda, so e{t+1} reads it once
+    pivot = ", ".join(
+        f"max(CASE WHEN comparison = '{comp.output_column_name}' "
+        f"AND gamma_value = {k} THEN {col} END) AS {col}{i}_{k}"
+        for i, comp in enumerate(comps)
+        for k in range(len(comp.scored_levels))
+        for col in ("m", "u")
+    )
+    ctes.append(
+        f"pw0 AS (SELECT {pivot}, CAST({lam_init!r} AS DOUBLE) AS lam "
+        f"FROM params0)"
+    )
     for t in range(1, n_iter + 1):
         prev = t - 1
-        # params{prev} pivoted to one row, so e{t} reads it once
-        pivot = ", ".join(
-            f"max(CASE WHEN comparison = '{comp.output_column_name}' "
-            f"AND gamma_value = {k} THEN {col} END) AS {col}{i}_{k}"
-            for i, comp in enumerate(comps)
-            for k in range(len(comp.scored_levels))
-            for col in ("m", "u")
-        )
-        ctes.append(f"pw{prev} AS (SELECT {pivot} FROM params{prev})")
         prodm = " * ".join(factor("m", i, c) for i, c in enumerate(comps))
         produ = " * ".join(factor("u", i, c) for i, c in enumerate(comps))
         gamma_cols = ", ".join(f"h.{c.gamma_column}" for c in comps)
         ctes.append(
             f"e{t} AS (SELECT {gamma_cols}, h.pattern_count, "
-            f"(L.lam * ({prodm})) / (L.lam * ({prodm}) + "
-            f"(CAST(1.0 AS DOUBLE) - L.lam) * ({produ})) AS p "
-            f"FROM h CROSS JOIN lam{prev} L CROSS JOIN pw{prev} P)"
+            f"(P.lam * ({prodm})) / (P.lam * ({prodm}) + "
+            f"(CAST(1.0 AS DOUBLE) - P.lam) * ({produ})) AS p "
+            f"FROM h CROSS JOIN pw{prev} P)"
         )
         names = ", ".join(f"('{c.output_column_name}')" for c in comps)
+        names += ", ('__lambda')"
         pick = " ".join(
             f"WHEN '{c.output_column_name}' THEN e.{c.gamma_column}"
             for c in comps
-        )
+        ) + " WHEN '__lambda' THEN 0"
+        # gamma = -1 rows match no grid level, so the LEFT JOIN drops them
         unpivot = (
-            f"SELECT * FROM (SELECT n.comparison, CASE n.comparison "
+            f"SELECT n.comparison, CASE n.comparison "
             f"{pick} END AS gamma_value, e.p, e.pattern_count "
-            f"FROM e{t} e CROSS JOIN (VALUES {names}) AS n(comparison)) u "
-            f"WHERE gamma_value != -1"
+            f"FROM e{t} e CROSS JOIN (VALUES {names}) AS n(comparison)"
         )
         ctes.append(
             f"mu{t} AS (SELECT g.comparison, g.gamma_value, "
@@ -569,17 +575,18 @@ def _em_session_sql(
         ctes.append(
             f"params{t} AS (SELECT comparison, gamma_value, "
             f"m_num / sum(m_num) OVER (PARTITION BY comparison) AS m, "
-            f"u_num / sum(u_num) OVER (PARTITION BY comparison) AS u "
-            f"FROM mu{t})"
+            f"u_num / sum(u_num) OVER (PARTITION BY comparison) AS u, "
+            f"CASE WHEN comparison = '__lambda' "
+            f"THEN m_num / (m_num + u_num) END AS lam FROM mu{t})"
         )
         ctes.append(
-            f"lam{t} AS (SELECT sum(p * CAST(pattern_count AS DOUBLE))"
-            f" / sum(CAST(pattern_count AS DOUBLE)) AS lam FROM e{t})"
+            f"pw{t} AS (SELECT {pivot}, max(lam) AS lam FROM params{t})"
         )
 
     surface = " UNION ALL ".join(
         f"SELECT {t} AS iteration, p.comparison, p.gamma_value, "
-        f"p.m, p.u, L.lam FROM params{t} p CROSS JOIN lam{t} L"
+        f"p.m, p.u, L.lam FROM params{t} p CROSS JOIN pw{t} L "
+        f"WHERE p.comparison != '__lambda'"
         for t in range(1, n_iter + 1)
     )
     return (

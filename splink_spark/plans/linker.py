@@ -346,8 +346,10 @@ class Linker:
     ) -> DataFrame:
         """Score a small new table against the base without re-blocking
         everything: the new side is broadcast into the blocking key
-        join, so the base's key table never shuffles for it (a natural
-        broadcast-hash-join at any base size).
+        join, so the base's key table does not shuffle for that join.
+        With several rules the kept pairs are then attached to the base
+        by uid, and once the base is too big to broadcast that attach
+        shuffles the base once per request.
 
         TF columns on the new side come from the BASE's cached TF tables
         (not batch-local frequencies — a new record's tf must reflect

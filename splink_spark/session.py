@@ -4,13 +4,37 @@ Tuned for local[N] testing but with the settings that matter on a real
 multi-executor cluster: AQE (runtime re-plan, skew-join splitting,
 partition coalescing), Arrow for the pandas-UDF comparator path, and
 shuffle partitions sized to parallelism rather than the 200 default.
+
+Python workers are forked from ``splink_spark._worker_daemon``
+(``spark.python.daemon.module``) instead of ``pyspark.daemon``. Below
+Python 3.13 the stock worker re-reads every ``pyspark.zip`` directory
+entry on each task (``importlib.invalidate_caches``); the package daemon
+skips the re-read while the archive is unchanged, which cuts ~0.15-0.2
+CPU-s from every Python task. On 3.13+ it patches nothing. Since the
+daemon is started as ``python -m splink_spark._worker_daemon`` in the
+JVM's working directory, the directory holding this package is put on
+the workers' ``PYTHONPATH`` (``spark.executorEnv.PYTHONPATH``).
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+_WORKER_DAEMON = "splink_spark._worker_daemon"
+# the directory that holds the imported splink_spark package
+_PACKAGE_ROOT = str(Path(__file__).resolve().parent.parent)
+_WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+
+
+def _worker_pythonpath(current: str | None) -> str:
+    """``current`` with the package root appended unless already on it."""
+    parts = [p for p in (current or "").split(os.pathsep) if p]
+    if _PACKAGE_ROOT not in parts:
+        parts.append(_PACKAGE_ROOT)
+    return os.pathsep.join(parts)
 
 
 def get_spark(
@@ -19,6 +43,20 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """A ``local[cores]`` session (default ``SPARK_GRAFT_CPUS``, else 32).
+
+    Python workers start from ``splink_spark._worker_daemon``, which
+    stops them re-reading ``pyspark.zip`` on every task below Python
+    3.13, and the directory holding this package is appended to
+    ``spark.executorEnv.PYTHONPATH`` so the daemon imports from any
+    working directory (``local[n]`` workers see the driver's paths).
+    ``extra_conf`` is applied last: it can set
+    ``spark.python.daemon.module`` back to ``pyspark.daemon``, and a
+    ``spark.executorEnv.PYTHONPATH`` it gives is kept, ahead of the
+    package root.
+    """
+    extra_conf = dict(extra_conf or {})
+    extra_conf[_WORKER_PATH] = _worker_pythonpath(extra_conf.get(_WORKER_PATH))
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -53,8 +91,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
+        .config("spark.python.daemon.module", _WORKER_DAEMON)
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

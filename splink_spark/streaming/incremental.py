@@ -6,9 +6,10 @@ that operator becomes a Structured Streaming sink: each micro-batch of
 new records is scored against the static (persisted) base via the same
 broadcast-join path, and appended to a parquet edge log.
 
-The base never re-shuffles: new records are broadcast per micro-batch,
-so a 100 TB base supports a live trickle of arrivals at constant cost
-per batch.
+New records are broadcast into the blocking key join per micro-batch,
+so the base's key table does not shuffle for it. With several rules the
+kept pairs are attached to the base by uid, and once the base is too
+big to broadcast that attach shuffles the base once per batch.
 """
 
 from __future__ import annotations
